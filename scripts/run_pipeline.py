@@ -41,6 +41,9 @@ def main():
                          "--conf spark.io.compression.codec=zstd for "
                          "disk-tight endurance legs")
     args = ap.parse_args()
+    bad = [kv for kv in args.conf if kv.find("=") < 1]  # no '=' or no key
+    if bad:
+        ap.error(f"--conf expects KEY=VALUE, got {bad[0]!r}")
 
     extra_conf = dict(kv.split("=", 1) for kv in args.conf)
     spark = build_session(

@@ -3,6 +3,10 @@ byte-identity, pair recall per planted kind, cluster integrity."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -440,3 +444,18 @@ def test_verify_prune_sides_same_output(spark, corpus, result):
         for r in res["pairs"].collect()
     }
     assert got == want
+
+
+def test_run_pipeline_rejects_conf_without_equals():
+    """`--conf foo` is a usage error (exit 2) raised before any Spark
+    session starts."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, os.path.join(repo, "scripts", "run_pipeline.py"),
+         "--conf", "foo"],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 2
+    assert "usage:" in proc.stderr
+    assert "--conf expects KEY=VALUE" in proc.stderr
+    assert "SparkContext" not in proc.stderr

@@ -9,9 +9,14 @@
   into an O(N * n_probe / K) scan. Centroids here are deterministic samples
   (lowest vec_ids); a production deployment plugs k-means centroids into the
   same operator unchanged.
+- k-means centroids: Lloyd steps of one Spark job each — every partition
+  returns its K x dim partial sum vectors and K counts, and the driver adds
+  them up.
 - embedding near-dup pairs: all-pairs cosine above a threshold, blocked by
   centroid assignment at scale (cross-partition near-dups bounded by probe
-  width, same IVF tradeoff).
+  width, same IVF tradeoff). A pair that shares several probed buckets is
+  scored only in the smallest of them, so no dedup stage follows the bucket
+  join; at full probe width no centroids are computed at all.
 """
 
 from __future__ import annotations
@@ -53,6 +58,11 @@ def cosine_topk(
     )
 
 
+def _unit_rows(m: np.ndarray) -> np.ndarray:
+    """Rows of ``m`` scaled to unit length (zero rows stay zero)."""
+    return m / (np.linalg.norm(m, axis=1, keepdims=True) + 1e-12)
+
+
 def make_centroid_assign_udf(centroids: np.ndarray):
     """pandas UDF: embedding -> index of nearest centroid (cosine).
 
@@ -63,8 +73,7 @@ def make_centroid_assign_udf(centroids: np.ndarray):
 
     @pandas_udf(IntegerType())
     def assign(vecs: pd.Series) -> pd.Series:
-        m = np.array(vecs.tolist(), dtype=np.float64)
-        m /= np.linalg.norm(m, axis=1, keepdims=True) + 1e-12
+        m = _unit_rows(np.array(vecs.tolist(), dtype=np.float64))
         return pd.Series(np.argmax(m @ c.T, axis=1).astype("int32"))
 
     return assign
@@ -87,6 +96,26 @@ def deterministic_centroids(
     return np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
 
 
+def _lloyd_partials(centroids: np.ndarray):
+    """mapInPandas body for one Lloyd step: a partition's vectors grouped by
+    nearest centroid (cosine, as make_centroid_assign_udf) become ONE row —
+    the K x dim per-cluster sums, flattened, and the K counts."""
+    c = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
+    k, dim = centroids.shape
+
+    def partials(batches):
+        acc = np.zeros((k, dim))
+        cnt = np.zeros(k, dtype=np.int64)
+        for pdf in batches:
+            m = np.array(pdf["_v"].tolist(), dtype=np.float64).reshape(-1, dim)
+            a = np.argmax(_unit_rows(m) @ c.T, axis=1)
+            np.add.at(acc, a, m)
+            cnt += np.bincount(a, minlength=k)
+        yield pd.DataFrame({"_s": [acc.ravel()], "_n": [cnt]})
+
+    return partials
+
+
 def kmeans_centroids(
     embeddings: DataFrame,
     n_centroids: int = 16,
@@ -96,13 +125,15 @@ def kmeans_centroids(
     seed: int = 42,
 ) -> np.ndarray:
     """Distributed spherical k-means (Lloyd): deterministic hash-ordered
-    init, then ``iters`` rounds of {assign via one numpy matmul per Arrow
-    batch, recompute means via a (cluster, dim) sum aggregation}.
+    init, then ``iters`` Lloyd steps of ONE Spark job each. Every partition
+    assigns its vectors with one numpy matmul per Arrow batch and returns a
+    single row of K x dim partial sums and K counts (``mapInPandas``); the
+    driver adds the partials and divides.
 
-    Everything distributed is a DataFrame job; only the K x dim centroid
-    matrix (a few KB) ever reaches the driver. Empty clusters keep their
-    previous centroid. Deterministic: init order is xxhash64(id, seed) and
-    the mean is computed from exact per-dimension sums.
+    No vector rows are shuffled; only the partials (a few KB per partition)
+    and the K x dim centroid matrix ever reach the driver. Empty clusters
+    keep their previous centroid. Deterministic: init order is
+    xxhash64(id, seed) and the means come from exact per-dimension sums.
     """
     init_rows = (
         embeddings.orderBy(F.xxhash64(F.col(id_col), F.lit(seed)).asc())
@@ -111,27 +142,18 @@ def kmeans_centroids(
         .collect()
     )
     centroids = np.array([list(r[vec_col]) for r in init_rows], dtype=np.float64)
+    vecs = embeddings.select(F.col(vec_col).cast("array<double>").alias("_v"))
 
     for _ in range(iters):
-        assign = make_centroid_assign_udf(centroids)
-        assigned = embeddings.select(
-            assign(F.col(vec_col).cast("array<double>")).alias("_c"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        )
-        # per-dimension sums: posexplode keeps the agg entirely JVM-side;
-        # output is K*dim rows (tiny), shuffle is one hash partial-agg
-        sums = (
-            assigned.select("_c", F.posexplode("_v").alias("_d", "_x"))
-            .groupBy("_c", "_d")
-            .agg(F.sum("_x").alias("_s"), F.count(F.lit(1)).alias("_n"))
-            .collect()
-        )
-        new = centroids.copy()
+        parts = vecs.mapInPandas(
+            _lloyd_partials(centroids), "_s array<double>, _n array<long>"
+        ).collect()
         acc = np.zeros_like(centroids)
         cnt = np.zeros(len(centroids), dtype=np.int64)
-        for r in sums:
-            acc[r["_c"], r["_d"]] = r["_s"]
-            cnt[r["_c"]] = r["_n"]
+        for r in parts:
+            acc += np.reshape(r["_s"], centroids.shape)
+            cnt += np.asarray(r["_n"], dtype=np.int64)
+        new = centroids.copy()
         nonempty = cnt > 0
         new[nonempty] = acc[nonempty] / cnt[nonempty, None]
         centroids = new
@@ -173,8 +195,7 @@ def make_multiprobe_assign_udf(centroids: np.ndarray, n_probe: int):
 
     @pandas_udf(ArrayType(IntegerType()))
     def assign(vecs: pd.Series) -> pd.Series:
-        m = np.array(vecs.tolist(), dtype=np.float64)
-        m /= np.linalg.norm(m, axis=1, keepdims=True) + 1e-12
+        m = _unit_rows(np.array(vecs.tolist(), dtype=np.float64))
         sims = m @ c.T
         top = np.argpartition(-sims, p - 1, axis=1)[:, :p].astype("int32")
         return pd.Series(list(top))
@@ -193,46 +214,63 @@ def ann_near_dup_pairs(
 ) -> DataFrame:
     """Near-dup pairs via IVF bucketing — the scale path.
 
-    Every vector is assigned to its ``n_probe`` nearest centroids
-    (multi-probe covers boundary pairs whose nearest centroids differ);
-    candidate pairs are generated ONLY within shared buckets, then scored
-    exactly. Complexity is sum over buckets of |bucket|^2 ~= n^2 *
-    n_probe^2 / K instead of the brute-force n^2 — with K scaled ~sqrt(n)
-    buckets stay bounded and the self-join shuffles on the bucket key
-    instead of broadcasting a cartesian.
+    Every vector carries its probe set ``_bs``: its ``n_probe`` nearest
+    centroids (multi-probe covers boundary pairs whose nearest centroids
+    differ). Candidate pairs are generated ONLY within shared buckets, and a
+    pair is scored only in the SMALLEST bucket both vectors probe
+    (``_b == array_min(array_intersect(_bsa, _bsb))``), so each pair is
+    emitted once without a dedup stage above the bucket join. Per-vector
+    norms are computed before the join; a pair costs one dot product.
+    Complexity is sum over buckets of |bucket|^2 ~= n^2 * n_probe^2 / K
+    instead of the brute-force n^2 — with K scaled ~sqrt(n) buckets stay
+    bounded and the self-join shuffles on the bucket key instead of
+    broadcasting a cartesian.
 
-    Recall: a true pair is found iff the two vectors share >= 1 of their
-    n_probe buckets. With n_probe == n_centroids this is EXACTLY the
-    brute-force result (tested); at small n_probe, recall vs the brute
-    oracle is asserted in tests/test_similarity_search.py.
+    With ``n_probe >= K`` every vector probes every bucket whatever the
+    centroids are, so no centroids are computed (no k-means, no UDF):
+    ``_bs`` is the constant 0..K-1 and the result is EXACTLY the
+    brute-force result (tested). Recall at smaller n_probe: a true pair is
+    found iff the two vectors share >= 1 of their n_probe buckets; it is
+    asserted against the brute oracle in tests/test_similarity_search.py.
     """
-    if centroids is None:
-        centroids = kmeans_centroids(
-            embeddings, n_centroids, id_col=id_col, vec_col=vec_col
-        )
-    assign = make_multiprobe_assign_udf(centroids, n_probe)
+    v = F.col(vec_col).cast("array<double>")
+    k = n_centroids if centroids is None else len(centroids)
+    if n_probe >= k:
+        probes = F.sequence(F.lit(0), F.lit(k - 1))
+    else:
+        if centroids is None:
+            centroids = kmeans_centroids(
+                embeddings, n_centroids, id_col=id_col, vec_col=vec_col
+            )
+        # nondeterministic: keeps the optimizer from inlining the UDF into
+        # the join key's inferred isnotnull filter (a second evaluation)
+        assign = make_multiprobe_assign_udf(centroids, n_probe)
+        probes = assign.asNondeterministic()(v)
     e = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-        F.explode(assign(F.col(vec_col).cast("array<double>"))).alias("_b"),
+        F.col(id_col).alias("_id"), v.alias("_v"), probes.alias("_bs")
+    ).select(
+        "_id",
+        "_v",
+        F.sqrt(_dot(F.col("_v"), F.col("_v"))).alias("_n"),
+        "_bs",
+        F.explode("_bs").alias("_b"),
     )
-    a = e.select(
-        F.col("_b"), F.col(id_col).alias("id_a"), F.col("_v").alias("_va")
+
+    def side(s: str) -> DataFrame:
+        return e.select(
+            "_b",
+            F.col("_id").alias(f"id_{s}"),
+            F.col("_v").alias(f"_v{s}"),
+            F.col("_n").alias(f"_n{s}"),
+            F.col("_bs").alias(f"_bs{s}"),
+        )
+
+    pairs = side("a").join(side("b"), on="_b").filter(
+        (F.col("id_a") < F.col("id_b"))
+        & (F.col("_b") == F.array_min(F.array_intersect("_bsa", "_bsb")))
     )
-    b = e.select(
-        F.col("_b"), F.col(id_col).alias("id_b"), F.col("_v").alias("_vb")
-    )
-    cand = (
-        a.join(b, on="_b")
-        .filter(F.col("id_a") < F.col("id_b"))
-        # multi-probe makes a pair surface once per shared bucket
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    cs = _dot(F.col("_va"), F.col("_vb")) / (
-        F.sqrt(_dot(F.col("_va"), F.col("_va")))
-        * F.sqrt(_dot(F.col("_vb"), F.col("_vb")))
-    )
-    return cand.select(
+    cs = _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
+    return pairs.select(
         "id_a", "id_b", F.round(cs, 4).alias("cos_sim")
     ).filter(F.col("cos_sim") >= threshold)
 

@@ -1865,9 +1865,10 @@ def minhash_sig_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_near_dup_pairs",
     # Full-probe IVF (n_probe == n_centroids) is provably equal to the
-    # brute-force all-pairs join — every vector lands in every probed
-    # bucket, so all pairs co-occur and are scored exactly — which makes
-    # the exact pairwise SQL a valid oracle for the ANN code path.
+    # brute-force all-pairs join — every vector lands in every bucket, so
+    # no centroids are computed, all pairs co-occur, and each is scored
+    # exactly once (in the smallest bucket both vectors probe) — which
+    # makes the exact pairwise SQL a valid oracle for the ANN code path.
     """
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
            ROUND(
