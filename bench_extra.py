@@ -1,7 +1,6 @@
-"""Extra benchmarks for optimization work (bench.py is FROZEN for the
-driver's measurement; everything exploratory lives here).
-
-Modes (pick one):
+"""Per-query benchmark for optimization work (bench.py stays FROZEN; the
+pipeline's phases are measured by ``scripts/run_pipeline.py --json`` and
+``perfbench --trace 1``).
 
   python bench_extra.py queries [sf_dir] [names,comma,separated] [reps]
       Per-query wall with the SAME checksum aggregation bench.py uses
@@ -9,17 +8,6 @@ Modes (pick one):
       computed columns), min-of-N with raw reps and the result hash
       printed — the hash makes before/after runs comparable as a
       result-equality check, not just a timing.
-
-  python bench_extra.py phases [n_docs] [reps]
-      Dedup-pipeline phase decomposition at bench scale with candidate
-      generation split out of the fused verify query (run_pipeline fuses
-      them into one job; this mode materializes candidates separately so
-      the two phases are attributable). Outputs per-phase min-of-N plus
-      the pinned candidate/pair/cluster counts.
-
-  python bench_extra.py pipeline [n_docs] [reps]
-      Exactly bench.py's web_dedup_pipeline leg (same corpus, same
-      persist, same count methodology), runnable standalone.
 
 Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in bench.py.
 """
@@ -36,25 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 from ufo_dedup_spark import queries as Q  # noqa: E402
-from ufo_dedup_spark.operators.connected_components import (  # noqa: E402
-    connected_components,
-)
-from ufo_dedup_spark.pipeline import (  # noqa: E402
-    METHOD_PRIORITY,
-    PipelineConfig,
-    candidate_pairs,
-    prepare_documents,
-    prepare_tokens,
-    run_pipeline,
-    substring_pairs,
-    verify_candidate_pairs,
-)
-from ufo_dedup_spark.operators.pairs import first_wins_by_priority  # noqa: E402
-from ufo_dedup_spark.operators.substring import (  # noqa: E402
-    substring_candidate_pairs,
-)
 from ufo_dedup_spark.session import build_session  # noqa: E402
-from ufo_dedup_spark.synth import SynthConfig, corpus_dataframes  # noqa: E402
 
 HEADLINE = [
     "pricing_summary", "top_customer_revenue", "customer_top_orders",
@@ -102,118 +72,7 @@ def mode_queries(argv):
     spark.stop()
 
 
-def mode_phases(argv):
-    n_docs = int(argv[0]) if argv else 20000
-    reps = int(argv[1]) if len(argv) > 1 else 3
-    spark = build_session(app_name="bench-extra-phases")
-    spark.sparkContext.setLogLevel("ERROR")
-    cfg = PipelineConfig()
-    pages, _, _ = corpus_dataframes(spark, SynthConfig(n_docs=n_docs, seed=42))
-    pages = pages.persist()
-    pages.count()
-    all_phases = []
-    for _ in range(reps):
-        ph = {}
-        t = time.time()
-        docs = prepare_documents(pages, use_extractor=True).localCheckpoint(
-            eager=True
-        )
-        ph["docs_extract"] = round(time.time() - t, 2)
-        t = time.time()
-        cands = candidate_pairs(docs, cfg).localCheckpoint(eager=True)
-        n_cands = cands.count()
-        ph["candidates"] = round(time.time() - t, 2)
-        t = time.time()
-        prepped = prepare_tokens(docs).localCheckpoint(eager=True)
-        ph["tokens"] = round(time.time() - t, 2)
-        t = time.time()
-        sub_cands = substring_candidate_pairs(
-            docs, "id", "text", cfg.substring_gram, cfg.substring_window,
-            cfg.all_pairs_cap,
-        ).localCheckpoint(eager=True)
-        sub_cands.count()
-        ph["winnow_cands"] = round(time.time() - t, 2)
-        t = time.time()
-        verified = verify_candidate_pairs(
-            cands, docs, cfg, prepped=prepped, filtered=False
-        ).localCheckpoint(eager=True).filter(
-            F.col("score") >= cfg.verify_threshold
-        )
-        verified.count()
-        ph["verify"] = round(time.time() - t, 2)
-        t = time.time()
-        cheap_cc = connected_components(
-            verified.select("id_a", "id_b"),
-            max_iter=cfg.cheap_cc_max_iter, edges_distinct=True,
-        ).localCheckpoint(eager=True)
-        ph["cheap_cc"] = round(time.time() - t, 2)
-        t = time.time()
-        sub = substring_pairs(
-            docs, cfg, exclude=verified, exclude_clusters=cheap_cc,
-            cands=sub_cands,
-        )
-        prio = F.when(F.lit(False), F.lit(0))
-        for m, p in METHOD_PRIORITY.items():
-            prio = prio.when(F.col("method") == m, F.lit(p))
-        pairs = first_wins_by_priority(
-            verified.unionByName(sub).withColumn(
-                "priority", prio.otherwise(F.lit(99))
-            ),
-            METHOD_PRIORITY,
-        ).persist()
-        n_pairs = pairs.count()
-        ph["substring_and_pairs"] = round(time.time() - t, 2)
-        t = time.time()
-        edges = pairs.filter(
-            (F.col("score") >= cfg.cluster_threshold)
-            | (F.col("method") == "substring")
-        )
-        cc = connected_components(
-            edges.select("id_a", "id_b"), edges_distinct=True
-        )
-        n_cl = (
-            docs.select("id")
-            .join(cc, "id", "left")
-            .select(F.coalesce("cluster_id", "id"))
-            .count()
-        )
-        ph["final_cc"] = round(time.time() - t, 2)
-        pairs.unpersist()
-        ph.update(n_cands=n_cands, n_pairs=n_pairs, n_clustered=n_cl)
-        all_phases.append(ph)
-        print(json.dumps(ph), flush=True)
-    mins = {k: min(p[k] for p in all_phases) for k in all_phases[0]}
-    print(json.dumps({"metric": "bench_extra_phases", "n_docs": n_docs,
-                      "min": mins}))
-    spark.stop()
-
-
-def mode_pipeline(argv):
-    n_docs = int(argv[0]) if argv else 20000
-    reps = int(argv[1]) if len(argv) > 1 else 3
-    spark = build_session(app_name="bench-extra-pipeline")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).select(F.sum("id")).collect()
-    pages, _, _ = corpus_dataframes(spark, SynthConfig(n_docs=n_docs, seed=42))
-    pages = pages.persist()
-    pages.count()
-    rep_times = []
-    for _ in range(reps):
-        t0 = time.time()
-        result = run_pipeline(spark, pages, PipelineConfig())
-        n_pairs = result["pairs"].count()
-        n_clustered = result["clusters"].count()
-        result["pairs"].unpersist()
-        rep_times.append(round(time.time() - t0, 3))
-        print(json.dumps({"rep_sec": rep_times[-1], "pairs": n_pairs,
-                          "clustered": n_clustered}), flush=True)
-    print(json.dumps({"metric": "bench_extra_pipeline", "n_docs": n_docs,
-                      "min": min(rep_times), "reps": rep_times,
-                      "pairs": n_pairs, "clustered": n_clustered}))
-    spark.stop()
-
-
 if __name__ == "__main__":
-    mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
-    {"queries": mode_queries, "phases": mode_phases,
-     "pipeline": mode_pipeline}[mode](sys.argv[2:])
+    if sys.argv[1:2] not in ([], ["queries"]):
+        sys.exit(f"unknown mode {sys.argv[1]!r}: only 'queries' remains")
+    mode_queries(sys.argv[2:])

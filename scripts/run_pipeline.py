@@ -14,7 +14,11 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from ufo_dedup_spark.pipeline import PipelineConfig, run_pipeline  # noqa: E402
+from ufo_dedup_spark.pipeline import (  # noqa: E402
+    DISK_BARRIER_ROWS,
+    PipelineConfig,
+    run_pipeline,
+)
 from ufo_dedup_spark.session import build_session  # noqa: E402
 from ufo_dedup_spark.synth import SynthConfig, corpus_dataframes  # noqa: E402
 
@@ -26,15 +30,6 @@ def main():
     ap.add_argument("--master", default=None)
     ap.add_argument("--json", action="store_true",
                     help="print one JSON line (skip recall computation)")
-    ap.add_argument("--barrier-format", default=None,
-                    choices=["auto", "blocks", "parquet"],
-                    help="override PipelineConfig.barrier_format for "
-                         "barrier-implementation A/Bs (default: config "
-                         "default, i.e. 'auto')")
-    ap.add_argument("--tokens-bucketed", default=None, choices=["on", "off"],
-                    help="override PipelineConfig.tokens_barrier_bucketed "
-                         "(parquet-barrier runs only) for the bucketed "
-                         "doc_tokens A/B")
     ap.add_argument("--conf", action="append", default=[],
                     metavar="KEY=VALUE",
                     help="extra Spark conf for this run (repeatable), e.g. "
@@ -61,14 +56,9 @@ def main():
     # re-reads the corpus through loopback block fetches (the r5 4-JVM
     # docs_extract collapse, 33 -> 468 s). Parquet splits compress ~3-4x
     # and read per-executor with OS page-cache help.
-    cfg_kwargs = {}
-    if args.barrier_format:
-        cfg_kwargs["barrier_format"] = args.barrier_format
-    if args.tokens_bucketed:
-        cfg_kwargs["tokens_barrier_bucketed"] = args.tokens_bucketed == "on"
-    cfg = PipelineConfig(**cfg_kwargs)
+    cfg = PipelineConfig()
     lc = (args.master or "").startswith("local-cluster")
-    if args.rows >= cfg.barrier_disk_threshold_rows or lc:
+    if args.rows >= DISK_BARRIER_ROWS or lc:
         import atexit
         import shutil
         import tempfile

@@ -108,11 +108,13 @@ def test_checkpointed_pipeline_matches_plain(spark, tmp_path):
         spark, pages, str(tmp_path / "wd"), cfg, n_score_buckets=4
     )
 
-    plain_pairs = {
-        (r["id_a"], r["id_b"], r["method"]) for r in plain["pairs"].collect()
-    }
-    ck_pairs = {(r["id_a"], r["id_b"], r["method"]) for r in ck["pairs"].collect()}
-    assert plain_pairs == ck_pairs
+    def pair_rows(res):
+        return {
+            (r["id_a"], r["id_b"], r["method"], round(r["score"], 9))
+            for r in res["pairs"].collect()
+        }
+
+    assert pair_rows(plain) == pair_rows(ck)
 
     plain_cl = {(r["url"], r["cluster_id"]) for r in plain["clusters"].collect()}
     ck_cl = {(r["url"], r["cluster_id"]) for r in ck["clusters"].collect()}
@@ -124,10 +126,10 @@ def test_checkpointed_pipeline_matches_plain(spark, tmp_path):
         ck["lineage"]
     )
 
-    # second run is a pure read (no recompute): builders untouched ->
-    # compare wall clock indirectly by checking manifests unchanged
-    before = ck["lineage"]["pairs"]["completed_at"]
+    # second run is a pure read (no recompute, even with the branches
+    # running concurrently): every manifest is unchanged
     ck2 = run_pipeline_checkpointed(
         spark, pages, str(tmp_path / "wd"), cfg, n_score_buckets=4
     )
-    assert ck2["lineage"]["pairs"]["completed_at"] == before
+    assert ck2["lineage"] == ck["lineage"]
+    assert pair_rows(ck2) == pair_rows(ck)

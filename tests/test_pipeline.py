@@ -10,7 +10,16 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
-from ufo_dedup_spark.pipeline import PipelineConfig, prepare_documents, run_pipeline
+from ufo_dedup_spark.pipeline import (
+    DISK_BARRIER_ROWS,
+    PipelineConfig,
+    _auto_policy,
+    _Blocks,
+    _Parquet,
+    _run_stages,
+    prepare_documents,
+    run_pipeline,
+)
 from ufo_dedup_spark.synth import SynthConfig, corpus_dataframes
 
 N_DOCS = 600
@@ -274,26 +283,49 @@ def test_pipeline_aqe_off_same_output(spark, corpus, result):
     assert got == want
 
 
-def test_disk_barriers_same_output(spark, corpus, result):
-    """barrier_storage='disk' (the auto choice above the 1.5M-doc
-    threshold) must be a pure storage decision: identical pairs to the
-    default in-memory barriers."""
+@pytest.mark.parametrize(
+    "make_policy", [lambda: _Blocks(large=True), _Parquet],
+    ids=["blocks_disk", "parquet"],
+)
+def test_barrier_policies_same_output(spark, corpus, result, make_policy):
+    """DISK_ONLY blocks (the auto choice at >= DISK_BARRIER_ROWS docs) and
+    parquet splits (the auto choice for executors in separate JVMs) are
+    pure serving decisions: the one stage list yields the same pairs and
+    clusters as the default in-memory blocks."""
     pages, _, _ = corpus
-    want = {
+    want_pairs = {
         (r["id_a"], r["id_b"], r["method"], round(r["score"], 9))
         for r in result["pairs"].collect()
     }
-    r2 = run_pipeline(spark, pages, PipelineConfig(barrier_storage="disk"))
-    got = {
+    want_clusters = {tuple(r) for r in result["clusters"].collect()}
+    r2 = _run_stages(pages, PipelineConfig(), True, make_policy())
+    got_pairs = {
         (r["id_a"], r["id_b"], r["method"], round(r["score"], 9))
         for r in r2["pairs"].collect()
     }
-    assert got == want
+    assert got_pairs == want_pairs
+    assert {tuple(r) for r in r2["clusters"].collect()} == want_clusters
 
 
-def test_barrier_storage_validated():
-    with pytest.raises(ValueError, match="barrier_storage"):
-        PipelineConfig(barrier_storage="ssd")
+@pytest.mark.parametrize(
+    "master, n_docs, kind, large",
+    [
+        ("local[4]", None, _Blocks, None),
+        ("local", 10, _Blocks, False),
+        ("local-cluster[2,1,1024]", None, _Parquet, None),
+        ("spark://host:7077", 10, _Parquet, False),
+        ("local[4]", DISK_BARRIER_ROWS - 1, _Blocks, False),
+        ("local[4]", DISK_BARRIER_ROWS, _Blocks, True),
+    ],
+)
+def test_auto_policy(master, n_docs, kind, large):
+    """run_pipeline's policy is a pure function of the master string and
+    the doc count: parquet only for executors in separate JVMs, DISK_ONLY
+    blocks from 1,500,000 docs, undecided without a count."""
+    assert DISK_BARRIER_ROWS == 1_500_000
+    policy = _auto_policy(master, n_docs)
+    assert type(policy) is kind
+    assert policy.large is large
 
 
 def test_methods_present(result):
@@ -302,30 +334,6 @@ def test_methods_present(result):
     }
     assert {"exact", "minhash_lsh"} <= methods
     assert "substring" in methods or "prefix" in methods
-
-
-def test_barrier_format_validated():
-    with pytest.raises(ValueError, match="barrier_format"):
-        PipelineConfig(barrier_format="csv")
-
-
-def test_parquet_barriers_same_output(spark, corpus, result):
-    """barrier_format='parquet' (the auto choice for disk / multi-executor
-    runs) must be a pure serving decision: identical pairs to the default
-    localCheckpoint barriers. (test_disk_barriers_same_output covers the
-    auto disk->parquet path; this pins the explicit override at in-memory
-    scale.)"""
-    pages, _, _ = corpus
-    want = {
-        (r["id_a"], r["id_b"], r["method"], round(r["score"], 9))
-        for r in result["pairs"].collect()
-    }
-    r2 = run_pipeline(spark, pages, PipelineConfig(barrier_format="parquet"))
-    got = {
-        (r["id_a"], r["id_b"], r["method"], round(r["score"], 9))
-        for r in r2["pairs"].collect()
-    }
-    assert got == want
 
 
 def test_startswith_pair_scores_exactly_095(spark):
@@ -425,25 +433,6 @@ def test_lcs_udf_evaluated_once(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("ArrowEvalPython") == 1
-
-
-def test_verify_prune_sides_same_output(spark, corpus, result):
-    """verify_prune_sides=True (the sparse-corpus exchange bound) must not
-    change the pair table: pruning the token sides to candidate-touched
-    ids is a no-op under inner-join semantics."""
-    pages, _, _ = corpus
-    want = {
-        (r["id_a"], r["id_b"], r["method"], round(r["score"], 9))
-        for r in result["pairs"].collect()
-    }
-    res = run_pipeline(
-        spark, pages, PipelineConfig(verify_prune_sides=True)
-    )
-    got = {
-        (r["id_a"], r["id_b"], r["method"], round(r["score"], 9))
-        for r in res["pairs"].collect()
-    }
-    assert got == want
 
 
 def test_run_pipeline_rejects_conf_without_equals():

@@ -312,3 +312,13 @@ def test_first_wins_by_priority_matches_generic(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "SortAggregate" not in plan
+
+    # a method outside METHOD_PRIORITY (priority 99) fails the query,
+    # naming the priority, instead of yielding a NULL method and score
+    unknown = spark.createDataFrame(
+        [(11, 12, 0.9, "ann", "pending")], df.schema
+    ).withColumn("priority", prio.otherwise(F.lit(99)))
+    with pytest.raises(Exception, match="priority 99"):
+        first_wins_by_priority(
+            with_prio.unionByName(unknown), METHOD_PRIORITY
+        ).collect()

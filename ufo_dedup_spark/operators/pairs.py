@@ -68,7 +68,8 @@ def first_wins_by_priority(
 
     Preconditions (the pipeline satisfies both by construction):
     - ``method`` <-> ``priority`` is a bijection given by
-      ``method_by_priority`` (every input row's method is in the dict), so
+      ``method_by_priority`` (every input row's method is in the dict;
+      a pair won by a priority outside it raises at collection), so
       the generic tie-break ``(priority, method, -score)`` reduces to
       ``(priority, -score)`` and the winning method can be DECODED from the
       winning priority after the aggregation;
@@ -99,6 +100,16 @@ def first_wins_by_priority(
     score = F.when(F.lit(False), F.lit(0.0))
     for m, p in method_by_priority.items():
         decode = decode.when(F.col("_p") == p, F.lit(m))
+    # a winning priority outside the dict (a method missing from it) fails
+    # the query instead of emitting a NULL method and a NULL score
+    decode = decode.otherwise(
+        F.raise_error(
+            F.format_string(
+                "first_wins_by_priority: priority %s has no method in "
+                "method_by_priority", F.col("_p"),
+            )
+        )
+    )
     for p in prios:
         score = score.when(F.col("_p") == p, F.col(f"_s{p}"))
     return won.select(

@@ -16,6 +16,8 @@ Two stages, cheap -> expensive:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -191,6 +193,12 @@ def _lcs_len_udf_det(text_a: pd.Series, text_b: pd.Series) -> pd.Series:
 lcs_len_udf = _lcs_len_udf_det.asNondeterministic()
 
 
+def eager_checkpoint(df: DataFrame, name: str) -> DataFrame:
+    """Default stage barrier: materialize ``df`` now as in-memory RDD
+    blocks (``name`` labels the stage for barriers that store by name)."""
+    return df.localCheckpoint(eager=True)
+
+
 def substring_candidate_pairs(
     docs: DataFrame,
     id_col: str = "id",
@@ -198,28 +206,22 @@ def substring_candidate_pairs(
     gram_chars: int = 64,
     window: int = 137,
     all_pairs_cap: int = 64,
-    barrier_level=None,
-    barrier=None,
+    barrier: Callable[[DataFrame, str], DataFrame] = eager_checkpoint,
 ) -> DataFrame:
     """Distinct candidate pairs sharing >= 1 winnowed fingerprint.
 
-    ``barrier_level``: optional StorageLevel for the fingerprint barrier
-    (the pipeline passes DISK_ONLY above its barrier_disk_threshold_rows —
-    the exploded fingerprint table is corpus-sized). ``barrier``: optional
-    materialization function (df, name) -> df that takes precedence —
-    run_pipeline passes its parquet-split barrier for disk /
-    multi-executor runs."""
+    ``barrier``: materialization function (df, name) -> df for the
+    corpus-sized fingerprint table; the pipeline passes its barrier
+    policy's (DISK_ONLY blocks or parquet splits at scale)."""
     winnow = make_winnow_udf(gram_chars=gram_chars, window=window)
     # materialized: pairs_within_groups scans the fingerprint table twice,
     # and the winnow UDF is the expensive part
-    fps = docs.select(
-        F.col(id_col).alias("_id"),
-        F.explode(winnow(F.col(text_col))).alias("fp"),
-    )
-    fps = (
-        barrier(fps, "winnow_fps")
-        if barrier is not None
-        else fps.localCheckpoint(eager=True, storageLevel=barrier_level)
+    fps = barrier(
+        docs.select(
+            F.col(id_col).alias("_id"),
+            F.explode(winnow(F.col(text_col))).alias("fp"),
+        ),
+        "winnow_fps",
     )
     pairs = pairs_within_groups(fps, ["fp"], "_id", all_pairs_cap)
     return pairs.select("id_a", "id_b").distinct()

@@ -15,8 +15,21 @@ Stages (north rule), each a declarative DataFrame job:
 
 Skew handling: every bucket-family generator bounds its fan-out via
 pairs_within_groups (all-pairs below cap, sorted chain above — cluster
-recall preserved through transitive closure). Checkpoint/resume is layered
-on by sources/writers.py run_stage when a workdir is supplied.
+recall preserved through transitive closure).
+
+The stage graph is declared once, in _run_stages (signatures, tokens and
+winnow run as concurrent branches; a cheap CC over the verified pairs
+prunes substring candidates), and a barrier policy decides how each named
+stage materializes:
+
+  blocks      eager localCheckpoint; DISK_ONLY at >= DISK_BARRIER_ROWS docs
+  parquet     parquet splits read back (doc_tokens bucketed by id), for
+              executors in separate JVMs
+  checkpoint  durable CheckpointManager stages with lineage manifests;
+              verify commits per score bucket, so a killed run resumes
+
+run_pipeline picks blocks or parquet from the master and the corpus size;
+run_pipeline_checkpointed uses checkpoint.
 """
 
 from __future__ import annotations
@@ -35,8 +48,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ufo_dedup_spark.functions.extract import extract_text_udf
-from ufo_dedup_spark.functions.hashing import make_minhash_udf, make_simhash_udf
+from ufo_dedup_spark.checkpoint import CheckpointManager, config_fingerprint
+from ufo_dedup_spark.functions.extract import EXTRACTOR_VERSION, extract_text_udf
+from ufo_dedup_spark.functions.hashing import (
+    SIGNATURE_VERSION,
+    make_minhash_udf,
+    make_simhash_udf,
+)
 from ufo_dedup_spark.operators.connected_components import connected_components
 from ufo_dedup_spark.operators.minhash_lsh import (
     band_hashes_col,
@@ -44,6 +62,7 @@ from ufo_dedup_spark.operators.minhash_lsh import (
 )
 from ufo_dedup_spark.operators.pairs import first_wins_by_priority
 from ufo_dedup_spark.operators.substring import (
+    eager_checkpoint,
     substring_candidate_pairs,
     verify_substring_pairs,
 )
@@ -53,8 +72,7 @@ from ufo_dedup_spark.operators.substring import (
 # >=PREFIX_MIN_CHARS-char doc that is a prefix of a longer one, so a bucket
 # key longer than the minimum would hash a minimum-to-(key-1)-char doc
 # against a different (shorter) string than its superstring's first-K chars
-# and the true pair would never co-bucket. PipelineConfig validates
-# prefix_key_chars == PREFIX_MIN_CHARS at construction.
+# and the true pair would never co-bucket.
 PREFIX_MIN_CHARS = 20
 
 # Bumped whenever stage SEMANTICS or an inter-stage schema changes without
@@ -72,6 +90,19 @@ PREFIX_MIN_CHARS = 20
 #      join — pair membership identical, scores above 0.95 change
 #      (round 6)
 PIPELINE_LOGIC_VERSION = 3
+
+# Corpus size (docs) at and above which the blocks policy stores its
+# corpus-sized barriers (docs / signatures / tokens / winnow fingerprints)
+# as serialized DISK_ONLY blocks instead of Spark's default deserialized
+# in-memory storage, and the branch pool narrows from 3 to 2. Rationale:
+# deserialized JVM residency of docs + token arrays + signatures is ~5x
+# their serialized size, and above ~1.5M docs the barriers evict/thrash one
+# another in a single local heap (docs_extract measured 3.7 -> 47.7 s going
+# 1M -> 2M). A real cluster spreads them over executors — and parquet /
+# checkpoint barriers never had the problem — so this only changes
+# single-process behavior at scale. Small runs keep the faster in-memory
+# barriers.
+DISK_BARRIER_ROWS = 1_500_000
 
 
 @dataclass
@@ -97,9 +128,6 @@ class PipelineConfig:
     simhash_max_hamming: int = 3
 
     all_pairs_cap: int = 64
-    # MUST equal PREFIX_MIN_CHARS (validated in __post_init__): a longer key
-    # misses 20-to-(key-1)-char prefix pairs entirely.
-    prefix_key_chars: int = PREFIX_MIN_CHARS
     # each doc keeps at most this many candidate partners (smallest ids
     # win, deterministic): bounds total verification work at K*n even when
     # a boilerplate cluster surfaces O(bands * cluster_size) candidates.
@@ -120,60 +148,6 @@ class PipelineConfig:
     # discards — pure shuffle/agg cost. __post_init__ enforces the bound.
     substring_window: int = 137
     substring_min_span: int = 200
-
-    # Storage for the corpus-sized stage barriers (docs / signatures /
-    # tokens / winnow fingerprints). 'memory' = Spark's default
-    # deserialized MEMORY_AND_DISK; 'disk' = serialized DISK_ONLY; 'auto'
-    # picks disk at or above ``barrier_disk_threshold_rows`` docs (from the
-    # caller's n_docs_hint, else one cheap count of the materialized docs
-    # barrier). Rationale: deserialized JVM residency of docs + token
-    # arrays + signatures is ~5x their serialized size, and above ~1.5M
-    # docs the barriers evict/thrash one another in a single local heap
-    # (docs_extract measured 3.7 -> 47.7 s going 1M -> 2M). A real cluster
-    # spreads them over executors — and the checkpointed pipeline's parquet
-    # barriers never had the problem — so this only changes single-process
-    # behavior at scale. Small runs keep the faster in-memory barriers.
-    barrier_storage: str = "auto"
-    barrier_disk_threshold_rows: int = 1_500_000
-
-    # HOW stage barriers are served. 'blocks' = localCheckpoint (RDD
-    # blocks, DISK_ONLY above the row threshold, fetched through the
-    # block manager); 'parquet' = write the barrier as parquet splits in
-    # a temp dir and read it back; 'auto' = parquet ONLY when executors
-    # are separate JVMs (local-cluster / a real cluster master), blocks
-    # otherwise — including single-JVM disk barriers. Rationale, both
-    # directions measured at 4M docs: RDD disk blocks live on the
-    # executor that computed them, so in multi-executor runs every OTHER
-    # executor re-reads the corpus through one spindle + loopback block
-    # fetches (docs_extract 33 -> 468 s going 1 -> 4 JVMs; parquet splits
-    # read per-executor with OS page-cache help cut it to 91 s and lifted
-    # 1->4-JVM efficiency 0.303 -> 0.39, SCALING_r06). But in a SINGLE
-    # JVM the block manager is a local read and parquet only adds
-    # encode/decode plus split-bound read parallelism: serving the same
-    # 4M-doc barriers as parquet cost ~1.8x whole-run wall vs DISK_ONLY
-    # blocks at local[32] (1299 vs ~709 s; signatures branch 603 vs
-    # ~220 s), so disk storage alone must NOT trigger parquet.
-    barrier_format: str = "auto"
-
-    # Parquet-barrier (multi-JVM) runs write the doc_tokens barrier as a
-    # BUCKETED+sorted table on id so both verify joins read it
-    # co-partitioned (no per-side exchange/sort of the token payload
-    # across executor JVMs). False = plain parquet splits; kept as a
-    # switch for the measured-both-ways A/B (scripts/verify_prune_ab.py /
-    # BENCH.md) like barrier_format. No effect on block-barrier
-    # (single-JVM) runs.
-    tokens_barrier_bucketed: bool = True
-
-    # Left-semi-prune the verify sides to ids that actually appear in the
-    # candidate table before joining token payloads. On a SPARSE-duplicate
-    # corpus (few candidate-touched docs) this bounds the verify exchanges
-    # by the candidate-touched set instead of the corpus; on a dense
-    # corpus (the synthetic bench, where most docs are candidates) the
-    # prune's own exchange of the token table is pure overhead. Default
-    # off; measured both ways by scripts/verify_prune_ab.py. Output is
-    # identical either way (inner joins are unchanged by pruning
-    # non-matching build rows).
-    verify_prune_sides: bool = False
 
     # Driver-round cap for the CHEAP pre-substring clustering only. That
     # CC exists solely to prune already-connected substring candidates
@@ -200,83 +174,10 @@ class PipelineConfig:
                 f"gram + window - 1, so a wider window can miss true "
                 f">= min_span spans"
             )
-        if self.barrier_storage not in ("auto", "memory", "disk"):
-            raise ValueError(
-                f"barrier_storage must be 'auto', 'memory' or 'disk' "
-                f"(got {self.barrier_storage!r})"
-            )
-        if self.barrier_format not in ("auto", "blocks", "parquet"):
-            raise ValueError(
-                f"barrier_format must be 'auto', 'blocks' or 'parquet' "
-                f"(got {self.barrier_format!r})"
-            )
-        if self.prefix_key_chars != PREFIX_MIN_CHARS:
-            raise ValueError(
-                f"prefix_key_chars must equal PREFIX_MIN_CHARS "
-                f"({PREFIX_MIN_CHARS}): the prefix band's bucket key and its "
-                f"min-length verification gate must match or prefix pairs "
-                f"straddling the key length never co-bucket (got "
-                f"{self.prefix_key_chars})"
-            )
 
 
 METHOD_PRIORITY = {"exact": 1, "minhash_lsh": 2, "simhash": 3, "prefix": 4,
                    "substring": 5}
-
-
-def make_parquet_barrier(spark) -> Callable[[DataFrame, str], DataFrame]:
-    """Stage-barrier function that serves a DataFrame as parquet SPLITS.
-
-    Writes the frame to a fresh subdirectory of a per-call temp dir and
-    reads it back: the write is the eager materialization (same role as
-    ``localCheckpoint(eager=True)``) and the read-back is an ordinary
-    parquet scan, so every consumer — including executors in OTHER JVMs —
-    reads its own splits with OS page-cache help instead of fetching RDD
-    blocks from the one executor that computed them. The temp dir is
-    created lazily on first use and removed at interpreter exit (the
-    returned DataFrames reference the files for the session's lifetime,
-    so earlier cleanup would invalidate them).
-
-    ``bucket_by``: optional column name — the barrier is then written as a
-    BUCKETED (and per-bucket sorted) table instead of plain splits, so
-    downstream equi-joins on that column read the barrier already
-    partitioned: no exchange and no sort of the barrier side per join.
-    This is the multi-JVM verify fix — the token table was re-exchanged by
-    id twice (once per pair side) in every verify, and on separate-JVM
-    executors those exchanges are real network/disk traffic. Bucketed
-    parquet requires a catalog table (path-only parquet loses the bucket
-    spec), so the frame is registered under a per-run temp name pointing
-    at the same temp dir; the bucket count follows the session's shuffle
-    partitioning so join co-partitioning lines up.
-    """
-    state: dict = {"dir": None, "seq": 0}
-
-    def barrier(
-        df: DataFrame, name: str = "stage", bucket_by: str | None = None
-    ) -> DataFrame:
-        if state["dir"] is None:
-            state["dir"] = tempfile.mkdtemp(prefix="ufo_dedup_barriers_")
-            atexit.register(shutil.rmtree, state["dir"], ignore_errors=True)
-        state["seq"] += 1
-        path = os.path.join(state["dir"], f"{state['seq']:02d}_{name}")
-        if bucket_by is None:
-            df.write.parquet(path)
-            return spark.read.parquet(path)
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        tbl = f"ufo_dedup_barrier_{name}_{uuid.uuid4().hex[:10]}"
-        # repartition to the bucket layout first so each write task holds
-        # exactly one bucket's rows (one file per bucket; the read side
-        # then gets per-bucket sorted splits and plans no sort either)
-        (
-            df.repartition(n, bucket_by)
-            .write.bucketBy(n, bucket_by)
-            .sortBy(bucket_by)
-            .option("path", path)
-            .saveAsTable(tbl)
-        )
-        return spark.table(tbl)
-
-    return barrier
 
 
 def prepare_documents(pages: DataFrame, use_extractor: bool = True) -> DataFrame:
@@ -291,63 +192,30 @@ def prepare_documents(pages: DataFrame, use_extractor: bool = True) -> DataFrame
     )
 
 
-def prefix_candidate_pairs(
-    docs: DataFrame, cfg: PipelineConfig
-) -> DataFrame:
-    """Docs sharing their first ``prefix_key_chars`` chars (lowered/trimmed):
-    the candidate generator for the reference's 0.95 starts-with band, which
-    whole-document Jaccard LSH under-recalls.
-
-    The key length equals the band's 20-char minimum: the verification rule
-    fires for any >=20-char doc that is a prefix of a longer one, so a key
-    longer than 20 chars would hash a 20-63-char doc against a different
-    (shorter) string than its superstring's first-K chars and the true pair
-    would never share a bucket. Keying at exactly the minimum guarantees
-    every verifiable prefix pair collides; the coarser buckets this creates
-    are bounded by pairs_within_groups' star cap.
-    """
-    key = F.xxhash64(
-        F.substring(F.lower(F.trim(F.col("text"))), 1, cfg.prefix_key_chars)
-    )
-    keyed = docs.select(
-        F.col("id").alias("_id"),
-        key.alias("_pk"),
-        F.length(F.trim("text")).alias("_len"),
-    ).filter(F.col("_len") >= PREFIX_MIN_CHARS)
-    # one prefix key per doc -> pair uniqueness is structural, no distinct
-    return pairs_within_groups(keyed, ["_pk"], "_id", cfg.all_pairs_cap).select(
-        "id_a", "id_b"
-    )
-
-
 def candidate_pairs(
     docs: DataFrame,
     cfg: PipelineConfig,
-    barrier_level: StorageLevel | None = None,
-    barrier: Callable[[DataFrame, str], DataFrame] | None = None,
+    barrier: Callable[[DataFrame, str], DataFrame] = eager_checkpoint,
 ) -> DataFrame:
     """Union of all candidate generators with method labels (priority order
     resolves multi-method hits downstream).
 
-    ``barrier``: optional materialization function (run_pipeline passes
-    make_parquet_barrier for disk / multi-executor runs); when absent the
-    signatures barrier is a localCheckpoint at ``barrier_level``."""
+    ``barrier``: materialization function (df, name) -> df for the
+    signatures; the stage list passes its barrier policy's."""
     minhash = make_minhash_udf(cfg.num_perm, cfg.shingle_k, cfg.seed)
     simhash = make_simhash_udf(cfg.simhash_shingle_k, cfg.seed)
     # EAGER barrier: both LSH and SimHash branches consume the signatures
     # inside one downstream job. A lazy persist() does not protect against
     # concurrent first-consumers (each sees a cache miss and recomputes the
-    # UDFs), so materialize here. On a cluster this barrier is the
-    # signatures checkpoint write (sources/writers.py).
-    signed = docs.select(
-        "id",
-        minhash(F.col("text")).alias("minhash"),
-        simhash(F.col("text")).alias("simhash"),
-    )
-    signed = (
-        barrier(signed, "signatures")
-        if barrier is not None
-        else signed.localCheckpoint(eager=True, storageLevel=barrier_level)
+    # UDFs), so materialize here, through whichever barrier the policy
+    # serves (RDD blocks or parquet splits).
+    signed = barrier(
+        docs.select(
+            "id",
+            minhash(F.col("text")).alias("minhash"),
+            simhash(F.col("text")).alias("simhash"),
+        ),
+        "signatures",
     )
 
     # FUSED bucket families (guide §2.4 "remove shuffles outright"): all
@@ -422,7 +290,7 @@ def candidate_pairs(
             F.col("id").alias("_id"),
             F.lit(METHOD_PRIORITY["prefix"]).alias("_fam"),
             F.lit(0).alias("_k1"),
-            F.xxhash64(F.substring(lt, 1, cfg.prefix_key_chars)).alias("_k2"),
+            F.xxhash64(F.substring(lt, 1, PREFIX_MIN_CHARS)).alias("_k2"),
             null_fp.alias("_fp"),
         )
     )
@@ -590,22 +458,12 @@ def verify_candidate_pairs(
     # produced exactly fam_text._t for members, NULL otherwise), the text
     # bound stays family-sized, and the subtree is planned once per pair
     # side instead of once per doc side.
-    side = prepped
-    if cfg.verify_prune_sides:
-        # candidate-touched prune (sparse-duplicate corpora): ship 8-byte
-        # ids once so the token payload is only exchanged for docs that
-        # appear in >= 1 candidate pair. Inner-join semantics make this a
-        # no-op on the output.
-        touched = cands.select(F.col("id_a").alias("id")).unionByName(
-            cands.select(F.col("id_b").alias("id"))
-        )
-        side = prepped.join(touched, "id", "left_semi")
-    a = side.select(
+    a = prepped.select(
         F.col("id").alias("id_a"),
         F.col("_tok").alias("_tok_a"), F.col("_n").alias("_na"),
         F.col("_pk").alias("_pka"),
     )
-    b = side.select(
+    b = prepped.select(
         F.col("id").alias("id_b"),
         F.col("_tok").alias("_tok_b"), F.col("_n").alias("_nb"),
         F.col("_pk").alias("_pkb"),
@@ -659,7 +517,7 @@ def verify_candidate_pairs(
         # run TWICE per surviving row (measured ~2x the scoring cost at
         # 20k docs; almost every candidate survives, so the filter saves
         # nothing). Callers that materialize the scored table anyway
-        # (run_pipeline's verify checkpoint) apply the threshold on the
+        # (the stage list's verify stage) apply the threshold on the
         # MATERIALIZED column instead — identical rows downstream, score
         # computed once.
         return scored
@@ -669,9 +527,9 @@ def verify_candidate_pairs(
 def substring_pairs(
     docs: DataFrame,
     cfg: PipelineConfig,
-    exclude: DataFrame | None = None,
-    exclude_clusters: DataFrame | None = None,
-    cands: DataFrame | None = None,
+    exclude: DataFrame,
+    exclude_clusters: DataFrame,
+    cands: DataFrame,
 ) -> DataFrame:
     """Winnow candidates -> exact-LCS verification -> scored pairs.
 
@@ -679,39 +537,32 @@ def substring_pairs(
     winnow fingerprints trivially) and ``exclude_clusters``: (id, cluster_id)
     from clustering those cheap pairs — both pruned away BEFORE the
     expensive LCS UDF so it only sees genuinely new cross-cluster pairs.
-    ``cands``: precomputed winnow candidates (run_pipeline materializes them
-    concurrently with the MinHash/verify branch).
+    ``cands``: precomputed winnow candidates (the stage list computes them
+    concurrently with the signature and token branches).
     """
-    if cands is None:
-        cands = substring_candidate_pairs(
-            docs, "id", "text", cfg.substring_gram, cfg.substring_window,
-            cfg.all_pairs_cap,
+    cands = cands.join(
+        exclude.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
+    )
+    # drop candidates already connected by cheaper methods: a giant
+    # boilerplate cluster shares winnow fingerprints massively, and
+    # running exact-substring verification inside an already-formed
+    # cluster buys nothing
+    ca = exclude_clusters.select(
+        F.col("id").alias("id_a"), F.col("cluster_id").alias("_ca")
+    )
+    cb = exclude_clusters.select(
+        F.col("id").alias("id_b"), F.col("cluster_id").alias("_cb")
+    )
+    cands = (
+        cands.join(ca, "id_a", "left")
+        .join(cb, "id_b", "left")
+        .filter(
+            F.col("_ca").isNull()
+            | F.col("_cb").isNull()
+            | (F.col("_ca") != F.col("_cb"))
         )
-    if exclude is not None:
-        cands = cands.join(
-            exclude.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
-        )
-    if exclude_clusters is not None:
-        # drop candidates already connected by cheaper methods: a giant
-        # boilerplate cluster shares winnow fingerprints massively, and
-        # running exact-substring verification inside an already-formed
-        # cluster buys nothing
-        ca = exclude_clusters.select(
-            F.col("id").alias("id_a"), F.col("cluster_id").alias("_ca")
-        )
-        cb = exclude_clusters.select(
-            F.col("id").alias("id_b"), F.col("cluster_id").alias("_cb")
-        )
-        cands = (
-            cands.join(ca, "id_a", "left")
-            .join(cb, "id_b", "left")
-            .filter(
-                F.col("_ca").isNull()
-                | F.col("_cb").isNull()
-                | (F.col("_ca") != F.col("_cb"))
-            )
-            .select("id_a", "id_b")
-        )
+        .select("id_a", "id_b")
+    )
     verified = verify_substring_pairs(
         cands, docs, "id", "text", cfg.substring_min_span
     )
@@ -731,6 +582,311 @@ def substring_pairs(
             F.lit("pending").alias("status"),
         )
     )
+
+
+class _Blocks:
+    """Barrier policy: eager localCheckpoints (RDD blocks). Corpus-sized
+    barriers go DISK_ONLY once the corpus reaches DISK_BARRIER_ROWS docs.
+
+    ``barrier(df, name)`` materializes a corpus-sized intermediate (also
+    handed to candidate_pairs / substring_candidate_pairs for their
+    signature and fingerprint tables); ``stage(name, build)`` returns a
+    named stage of the graph, materialized or left lazy; ``verified``
+    materializes the scored candidates.
+    """
+
+    def __init__(self, large: bool | None = None):
+        # corpus >= DISK_BARRIER_ROWS; None = not known yet, decided from
+        # the docs barrier's count (the docs barrier itself stays in memory)
+        self.large = large
+
+    def barrier(self, df: DataFrame, name: str) -> DataFrame:
+        return df.localCheckpoint(
+            eager=True,
+            storageLevel=StorageLevel.DISK_ONLY if self.large else None,
+        )
+
+    def stage(self, name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        df = build()
+        if name in ("docs", "doc_tokens"):
+            return self.barrier(df, name)
+        if name == "cheap_clusters":
+            return df.localCheckpoint(eager=True)
+        if name == "pairs":
+            # lazy: the final CC's first job materializes it, and both the
+            # CC and the caller read it
+            return df.persist()
+        # candidates stay fused with verification: the family branches
+        # schedule concurrently inside one job and fill the cluster (a
+        # barrier here measured ~1.5x slower end-to-end). The winnow
+        # candidates (whose fingerprints are a barrier), substring pairs
+        # and clusters land in their consumer's job.
+        return df
+
+    def verified(self, cands: DataFrame, score: Callable) -> DataFrame:
+        return score(cands).localCheckpoint(eager=True)
+
+
+class _Parquet(_Blocks):
+    """Barrier policy for executors in separate JVMs: corpus-sized
+    barriers are written as parquet splits to a temp dir and read back.
+
+    The write is the eager materialization (same role as
+    ``localCheckpoint(eager=True)``) and the read-back is an ordinary
+    parquet scan, so every consumer — including executors in OTHER JVMs —
+    reads its own splits with OS page-cache help instead of fetching RDD
+    blocks from the one executor that computed them. The temp dir is
+    created on first use and removed at interpreter exit (the returned
+    DataFrames reference the files for the session's lifetime, so earlier
+    cleanup would invalidate them).
+
+    ``doc_tokens`` is written as a BUCKETED (and per-bucket sorted) table
+    on id, so both verify joins read the token table already
+    co-partitioned: no exchange and no sort of the token payload per pair
+    side, which was the worst-scaling phase across separate executor JVMs
+    (SCALING_r06_lc4: verify 0.36 efficiency on a 4x grant). Bucketed
+    parquet requires a catalog table (path-only parquet loses the bucket
+    spec), so the frame is registered under a per-run temp name pointing
+    at the same temp dir; the bucket count follows the session's shuffle
+    partitioning so join co-partitioning lines up.
+    """
+
+    _dir: str | None = None
+
+    def barrier(self, df: DataFrame, name: str) -> DataFrame:
+        spark = df.sparkSession
+        # unlocked check-then-set: the docs barrier always runs first, on
+        # the caller's thread, before the concurrent branches
+        if self._dir is None:
+            self._dir = tempfile.mkdtemp(prefix="ufo_dedup_barriers_")
+            atexit.register(shutil.rmtree, self._dir, ignore_errors=True)
+        # one barrier per name per run, so the name is the path
+        path = os.path.join(self._dir, name)
+        if name != "doc_tokens":
+            df.write.parquet(path)
+            return spark.read.parquet(path)
+        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        tbl = f"ufo_dedup_barrier_{name}_{uuid.uuid4().hex[:10]}"
+        # repartition to the bucket layout first so each write task holds
+        # exactly one bucket's rows (one file per bucket; the read side
+        # then gets per-bucket sorted splits and plans no sort either)
+        (
+            df.repartition(n, "id")
+            .write.bucketBy(n, "id")
+            .sortBy("id")
+            .option("path", path)
+            .saveAsTable(tbl)
+        )
+        return spark.table(tbl)
+
+
+class _Checkpoint(_Blocks):
+    """Barrier policy for durable resume: every named stage is a
+    CheckpointManager stage (parquet + lineage manifest), and verify
+    commits per deterministic score bucket (pmod(xxhash64(pair),
+    n_buckets)), so a killed job resumes from the last completed bucket.
+    Signature and fingerprint barriers stay blocks: they only live inside
+    their stage's write."""
+
+    def __init__(self, mgr, n_buckets: int):
+        super().__init__()
+        self.mgr = mgr
+        self.n_buckets = n_buckets
+
+    def stage(self, name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        return self.mgr.stage(name, build)
+
+    def verified(self, cands: DataFrame, score: Callable) -> DataFrame:
+        bucket = F.xxhash64("id_a", "id_b")
+        return self.mgr.partitioned_stage(
+            "verified", cands, bucket, self.n_buckets, score
+        )
+
+
+def _auto_policy(master: str, n_docs: int | None) -> _Blocks:
+    """run_pipeline's barrier policy from the master string and the corpus
+    size (None: decided after the docs barrier).
+
+    Parquet ONLY when executors are separate JVMs (local-cluster or a real
+    cluster master). Both directions measured at 4M docs: RDD disk blocks
+    live on the executor that computed them, so in multi-executor runs
+    every OTHER executor re-reads the corpus through one spindle + loopback
+    block fetches (docs_extract 33 -> 468 s going 1 -> 4 JVMs; parquet
+    splits cut it to 91 s and lifted 1->4-JVM efficiency 0.303 -> 0.39,
+    SCALING_r06). But in a SINGLE JVM the block manager is a local read and
+    parquet only adds encode/decode plus split-bound read parallelism:
+    serving the same 4M-doc barriers as parquet cost ~1.8x whole-run wall
+    vs DISK_ONLY blocks at local[32] (1299 vs ~709 s; signatures branch 603
+    vs ~220 s), so corpus size alone must NOT trigger parquet.
+    """
+    large = None if n_docs is None else n_docs >= DISK_BARRIER_ROWS
+    if master == "local" or master.startswith("local["):
+        return _Blocks(large)
+    return _Parquet(large)
+
+
+def _run_stages(
+    pages: DataFrame,
+    cfg: PipelineConfig,
+    use_extractor: bool,
+    policy: _Blocks,
+    timings: dict | None = None,
+) -> dict[str, DataFrame]:
+    """The dedup stage graph, declared once: docs -> {signatures +
+    candidates, tokens, winnow} -> verify -> cheap CC -> substring -> pairs
+    -> clusters. ``policy`` decides how each named stage materializes.
+
+    Every stage below fans out to multiple consumers that run concurrently
+    inside one job, so the corpus-sized ones are EAGER barriers — lazy
+    persist would let each branch recompute the full upstream (measured 3x
+    wall-clock at 20k docs).
+    """
+    sc = pages.sparkSession.sparkContext
+    timings = {} if timings is None else timings
+
+    def _mark(key: str, t0: float) -> None:
+        timings[key] = round(time.time() - t0, 2)
+
+    _t = time.time()
+    docs = policy.stage(
+        "docs", lambda: prepare_documents(pages, use_extractor=use_extractor)
+    )
+    if policy.large is None:
+        # one cheap count of the materialized barrier decides storage for
+        # the remaining (larger) corpus-sized barriers
+        policy.large = docs.count() >= DISK_BARRIER_ROWS
+    _mark("docs_extract", _t)
+
+    # The three doc-derived stages — MinHash/SimHash signatures (inside
+    # candidate_pairs), the per-doc token table, and the winnow
+    # fingerprint candidates — depend only on `docs` and are independent of
+    # each other, so they run as CONCURRENT driver threads in their own
+    # FAIR pools. Serially, each job's fixed driver latency (plan, AQE
+    # re-opt, barrier) adds up; overlapped, the fixed costs hide under
+    # whichever branch is longest, which is what lifts multi-core scaling
+    # (the 4N-core leg is latency-bound, not compute-bound).
+    branches = [
+        ("signatures", "candidates",
+         lambda: candidate_pairs(docs, cfg, barrier=policy.barrier)),
+        ("tokens", "doc_tokens", lambda: prepare_tokens(docs)),
+    ]
+    if cfg.substring_enabled:
+        branches.append((
+            "winnow", "winnow",
+            lambda: substring_candidate_pairs(
+                docs, "id", "text", cfg.substring_gram, cfg.substring_window,
+                cfg.all_pairs_cap, barrier=policy.barrier,
+            ),
+        ))
+
+    def _branch(branch) -> DataFrame:
+        pool, name, build = branch
+        sc.setLocalProperty("spark.scheduler.pool", pool)
+        t0 = time.time()
+        try:
+            return policy.stage(name, build)
+        finally:
+            sc.setLocalProperty("spark.scheduler.pool", None)
+            _mark(f"branch_{pool}", t0)
+
+    # Branch-pool width is SCALE-ADAPTIVE (the corpus-size signal that
+    # drives barrier storage): small corpora run all three branches at
+    # once — the phases are latency-bound there and a 3-wide pool measured
+    # consistently faster at 20k docs (alternating A/B, adjacent pairs
+    # 23.4/18.1, 17.4/15.5, 15.4/15.0 s for 2 vs 3). Large corpora keep 2:
+    # the signature and winnow branches are both Arrow/pandas-UDF heavy
+    # (each stage spawns one Python worker per core), and at
+    # memory-bandwidth-bound multi-million-doc scale running all three at
+    # once triples the worker fleet and thrashes the bus (r5 measurement).
+    # Two at a time still hides the fixed latency (the JVM-only token
+    # branch overlaps the signature UDFs).
+    _t = time.time()
+    with ThreadPoolExecutor(max_workers=2 if policy.large else 3) as ex:
+        cands, prepped, *sub_cands = ex.map(_branch, branches)
+    _mark("branch_block_wall", _t)
+
+    _t = time.time()
+    # filtered=False + filter on the materialized column: the threshold
+    # predicate would otherwise be pushed below the scoring projection and
+    # re-evaluate the score expression per row (see verify_candidate_pairs)
+    verified = policy.verified(
+        cands,
+        lambda part: verify_candidate_pairs(
+            part, docs, cfg, prepped=prepped, filtered=False
+        ),
+    ).filter(F.col("score") >= cfg.verify_threshold)
+    _mark("verify", _t)
+    all_pairs = verified
+    if cfg.substring_enabled:
+        # cluster the cheap edges first so the expensive substring stage can
+        # skip intra-cluster candidates. Capped at cheap_cc_max_iter: a
+        # partially converged clustering is a FINER sound partition (equal
+        # labels still imply connected), so the exclusion prunes less but
+        # never wrongly — and this CC's only job is pruning.
+        _t = time.time()
+        cc_stats: dict = {}
+        cheap_cc = policy.stage(
+            "cheap_clusters",
+            lambda: connected_components(
+                verified.filter(
+                    F.col("score") >= cfg.cluster_threshold
+                ).select("id_a", "id_b"),
+                max_iter=cfg.cheap_cc_max_iter,
+                stats=cc_stats,
+                # verified is one row per pair (candidate groupBy) -> skip
+                # the entry distinct exchange
+                edges_distinct=True,
+            ),
+        )
+        _mark("cheap_cc", _t)
+        timings["cheap_cc_rounds"] = cc_stats.get("rounds", 0)
+        timings["cheap_cc_entry_edges"] = cc_stats.get("entry_edges", 0)
+        all_pairs = all_pairs.unionByName(policy.stage(
+            "substring_pairs",
+            lambda: substring_pairs(
+                docs, cfg, exclude=verified, exclude_clusters=cheap_cc,
+                cands=sub_cands[0],
+            ),
+        ))
+
+    _t = time.time()
+    prio = F.when(F.lit(False), F.lit(0))
+    for m, p in METHOD_PRIORITY.items():
+        prio = prio.when(F.col("method") == m, F.lit(p))
+    # every pipeline method is in METHOD_PRIORITY and status is the
+    # constant 'pending', so the hash-aggregable specialization applies
+    # (identical output to first_wins, no SortAggregate)
+    pairs = policy.stage("pairs", lambda: first_wins_by_priority(
+        all_pairs.withColumn("priority", prio.otherwise(F.lit(99))),
+        METHOD_PRIORITY,
+    ))
+    _mark("build_tail", _t)
+
+    # NOTE: connected_components runs its driver loop while the clusters
+    # stage is built — under the lazy policies its first fingerprint job
+    # is also what materializes the persisted pairs table (substring LCS +
+    # first-wins dedup), so this marked interval covers substring
+    # verification + pair dedup + all final CC rounds.
+    _t = time.time()
+    final_cc_stats: dict = {}
+
+    def build_clusters() -> DataFrame:
+        edges = pairs.filter(
+            (F.col("score") >= cfg.cluster_threshold)
+            | (F.col("method") == "substring")
+        ).select("id_a", "id_b")
+        # pairs is one row per pair (first_wins) -> skip the entry distinct
+        cc = connected_components(
+            edges, stats=final_cc_stats, edges_distinct=True
+        )
+        return docs.select("id", "url").join(cc, "id", "left").select(
+            "id", "url", F.coalesce("cluster_id", "id").alias("cluster_id")
+        )
+
+    clusters = policy.stage("clusters", build_clusters)
+    _mark("substring_pairs_and_cc_rounds", _t)
+    timings["final_cc_rounds"] = final_cc_stats.get("rounds", 0)
+    return {"docs": docs, "pairs": pairs, "clusters": clusters}
 
 
 def run_pipeline(
@@ -755,232 +911,14 @@ def run_pipeline(
     caller's first action (run_pipeline.py times those separately).
 
     ``n_docs_hint``: approximate corpus size, used only to pick barrier
-    storage up front under barrier_storage='auto' (the docs barrier itself
-    can then go to disk); without it, auto decides after counting the
-    materialized docs barrier.
+    storage up front (the docs barrier itself can then go to disk);
+    without it, storage is decided after counting the materialized docs
+    barrier.
     """
-    cfg = cfg or PipelineConfig()
-
-    def _want_disk(n: int | None) -> bool | None:
-        if cfg.barrier_storage == "disk":
-            return True
-        if cfg.barrier_storage == "memory":
-            return False
-        return None if n is None else n >= cfg.barrier_disk_threshold_rows
-
-    def _use_parquet(disk_flag: bool | None) -> bool:
-        if cfg.barrier_format == "parquet":
-            return True
-        if cfg.barrier_format == "blocks":
-            return False
-        # auto: parquet ONLY when executors are separate JVMs — RDD disk
-        # blocks are single-executor-resident and every other executor
-        # would fetch them through the block manager (see
-        # make_parquet_barrier). In a single JVM (local[K]) the block
-        # manager read is local and parquet measurably loses (4M local[32]
-        # wall ~1.8x, see PipelineConfig.barrier_format), so disk storage
-        # alone does not trigger parquet.
-        del disk_flag  # storage level no longer affects the format choice
-        master = spark.sparkContext.master or ""
-        single_jvm = master == "local" or (
-            master.startswith("local[") and not
-            master.startswith("local-cluster")
-        )
-        return not single_jvm
-
-    def _mark(key: str, t0: float) -> None:
-        if timings is not None:
-            timings[key] = round(time.time() - t0, 2)
-
-    _t = time.time()
-    # EAGER stage barriers: every stage below fans out to multiple
-    # consumers that run concurrently inside one job — lazy persist would
-    # let each branch recompute the full upstream (measured 3x wall-clock
-    # at 20k docs). Small in-memory runs use localCheckpoint; disk /
-    # multi-executor runs serve barriers as parquet splits. On a real
-    # cluster these barriers are the per-stage checkpoint writes.
-    pq_barrier = make_parquet_barrier(spark)
-    disk = _want_disk(n_docs_hint)
-    stage = prepare_documents(pages, use_extractor=use_extractor)
-    if _use_parquet(disk):
-        docs = pq_barrier(stage, "docs")
-    else:
-        docs = stage.localCheckpoint(
-            eager=True,
-            storageLevel=StorageLevel.DISK_ONLY if disk else None,
-        )
-    if disk is None:
-        # auto with no hint: one cheap count of the materialized barrier
-        # decides storage for the remaining (larger) corpus-sized barriers
-        # (the docs barrier itself stays where it landed)
-        disk = _want_disk(docs.count())
-    barrier_level = StorageLevel.DISK_ONLY if disk else None
-    barrier = pq_barrier if _use_parquet(disk) else None
-    _mark("docs_extract", _t)
-
-    # The three doc-derived materializations — MinHash/SimHash signatures
-    # (inside candidate_pairs), the per-doc token table, and the winnow
-    # fingerprint candidates — depend only on `docs` and are independent of
-    # each other, so they run as CONCURRENT driver threads in their own
-    # FAIR pools. Serially, each job's fixed driver latency (plan, AQE
-    # re-opt, barrier) adds up; overlapped, the fixed costs hide under
-    # whichever branch is longest, which is what lifts multi-core scaling
-    # (the 4N-core leg is latency-bound, not compute-bound).
-    def _in_pool(pool: str, fn):
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
-        t0 = time.time()
-        try:
-            return fn()
-        finally:
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
-            _mark(f"branch_{pool}", t0)
-
-    # Branch-pool width is SCALE-ADAPTIVE (reusing the corpus-size signal
-    # that already drives barrier storage): small corpora run all three
-    # branches at once — the phases are latency-bound there and a 3-wide
-    # pool measured consistently faster at 20k docs (alternating A/B,
-    # adjacent pairs 23.4/18.1, 17.4/15.5, 15.4/15.0 s for 2 vs 3).
-    # Large corpora keep 2: the signature and winnow branches are both
-    # Arrow/pandas-UDF heavy (each stage spawns one Python worker per
-    # core), and at memory-bandwidth-bound multi-million-doc scale
-    # running all three at once triples the worker fleet and thrashes
-    # the bus (r5 measurement). Two at a time still hides the fixed
-    # latency (the JVM-only token branch overlaps the signature UDFs).
-    _t_block = time.time()
-    with ThreadPoolExecutor(max_workers=2 if disk else 3) as ex:
-        f_cands = ex.submit(
-            _in_pool,
-            "signatures",
-            lambda: candidate_pairs(
-                docs, cfg, barrier_level=barrier_level, barrier=barrier
-            ),
-        )
-        f_tokens = ex.submit(
-            _in_pool,
-            "tokens",
-            # parquet-barrier (multi-JVM) runs write doc_tokens BUCKETED
-            # by id: both verify joins then read the token table already
-            # co-partitioned on the join key — the two per-side exchanges
-            # (+ sorts) of the token payload disappear, which was the
-            # worst-scaling phase across separate executor JVMs
-            # (SCALING_r06_lc4: verify 0.36 efficiency on a 4x grant).
-            # Single-JVM block barriers are unchanged.
-            lambda: (
-                barrier(
-                    prepare_tokens(docs),
-                    "doc_tokens",
-                    bucket_by=(
-                        "id" if cfg.tokens_barrier_bucketed else None
-                    ),
-                )
-                if barrier is not None
-                else prepare_tokens(docs).localCheckpoint(
-                    eager=True, storageLevel=barrier_level
-                )
-            ),
-        )
-        f_subc = (
-            ex.submit(
-                _in_pool,
-                "winnow",
-                lambda: substring_candidate_pairs(
-                    docs, "id", "text", cfg.substring_gram,
-                    cfg.substring_window, cfg.all_pairs_cap,
-                    barrier_level=barrier_level, barrier=barrier,
-                ),
-            )
-            if cfg.substring_enabled
-            else None
-        )
-        # candidate generation stays fused with verification: the family
-        # branches schedule concurrently inside one job and fill the
-        # cluster (a barrier here measured ~1.5x slower end-to-end)
-        cands = f_cands.result()
-        prepped = f_tokens.result()
-        sub_cands = f_subc.result() if f_subc is not None else None
-    _mark("branch_block_wall", _t_block)
-
-    _t = time.time()
-    # filtered=False + filter on the materialized column: the threshold
-    # predicate would otherwise be pushed below the scoring projection and
-    # re-evaluate the score expression per row (see verify_candidate_pairs)
-    verified = verify_candidate_pairs(
-        cands, docs, cfg, prepped=prepped, filtered=False
-    ).localCheckpoint(eager=True).filter(
-        F.col("score") >= cfg.verify_threshold
+    policy = _auto_policy(spark.sparkContext.master or "", n_docs_hint)
+    return _run_stages(
+        pages, cfg or PipelineConfig(), use_extractor, policy, timings
     )
-    _mark("verify", _t)
-    all_pairs = verified
-    if cfg.substring_enabled:
-        # cluster the cheap edges first so the expensive substring stage can
-        # skip intra-cluster candidates. Capped at cheap_cc_max_iter: a
-        # partially converged clustering is a FINER sound partition (equal
-        # labels still imply connected), so the exclusion prunes less but
-        # never wrongly — and this CC's only job is pruning.
-        _t = time.time()
-        cc_stats: dict = {}
-        cheap_cc = connected_components(
-            verified.filter(F.col("score") >= cfg.cluster_threshold).select(
-                "id_a", "id_b"
-            ),
-            max_iter=cfg.cheap_cc_max_iter,
-            stats=cc_stats,
-            # verified is one row per pair (candidate groupBy) -> skip the
-            # entry distinct exchange
-            edges_distinct=True,
-        ).localCheckpoint(eager=True)
-        _mark("cheap_cc", _t)
-        if timings is not None:
-            timings["cheap_cc_rounds"] = cc_stats.get("rounds", 0)
-            timings["cheap_cc_entry_edges"] = cc_stats.get("entry_edges", 0)
-        all_pairs = all_pairs.unionByName(
-            substring_pairs(
-                docs, cfg, exclude=verified, exclude_clusters=cheap_cc,
-                cands=sub_cands,
-            )
-        )
-
-    _t = time.time()
-    prio = F.when(F.lit(False), F.lit(0))
-    for m, p in METHOD_PRIORITY.items():
-        prio = prio.when(F.col("method") == m, F.lit(p))
-    # every pipeline method is in METHOD_PRIORITY and status is the
-    # constant 'pending', so the hash-aggregable specialization applies
-    # (identical output to first_wins, no SortAggregate)
-    pairs = first_wins_by_priority(
-        all_pairs.withColumn("priority", prio.otherwise(F.lit(99))),
-        METHOD_PRIORITY,
-    ).persist()
-    _mark("build_tail", _t)
-
-    # NOTE: connected_components runs its driver loop HERE — its first
-    # fingerprint job is also what materializes the persisted pairs table
-    # (substring LCS + first-wins dedup), so this marked interval covers
-    # substring verification + pair dedup + all final CC rounds.
-    _t = time.time()
-    edges = pairs.filter(
-        (F.col("score") >= cfg.cluster_threshold)
-        | (F.col("method") == "substring")
-    )
-    final_cc_stats: dict = {}
-    cc = connected_components(
-        edges.select("id_a", "id_b"), stats=final_cc_stats,
-        # pairs is one row per pair (first_wins) -> skip the entry distinct
-        edges_distinct=True,
-    )
-    _mark("substring_pairs_and_cc_rounds", _t)
-    if timings is not None:
-        timings["final_cc_rounds"] = final_cc_stats.get("rounds", 0)
-    clusters = (
-        docs.select("id", "url")
-        .join(cc, on="id", how="left")
-        .select(
-            "id",
-            "url",
-            F.coalesce(F.col("cluster_id"), F.col("id")).alias("cluster_id"),
-        )
-    )
-    return {"docs": docs, "pairs": pairs, "clusters": clusters}
 
 
 def run_pipeline_checkpointed(
@@ -999,10 +937,6 @@ def run_pipeline_checkpointed(
     resumes from the last completed bucket. A changed PipelineConfig or
     extractor version invalidates all checkpoints via the fingerprint.
     """
-    from ufo_dedup_spark.checkpoint import CheckpointManager, config_fingerprint
-    from ufo_dedup_spark.functions.extract import EXTRACTOR_VERSION
-    from ufo_dedup_spark.functions.hashing import SIGNATURE_VERSION
-
     cfg = cfg or PipelineConfig()
     # SIGNATURE_VERSION is part of the fingerprint: a kernel rewrite changes
     # signature bytes even when every cfg field matches, and resuming buckets
@@ -1010,86 +944,12 @@ def run_pipeline_checkpointed(
     # candidate sets. PIPELINE_LOGIC_VERSION covers the complementary case:
     # stage semantics / inter-stage schema changes with identical cfg and
     # kernels (see its definition above).
-    mgr = CheckpointManager(
-        spark,
-        workdir,
-        config_fingerprint(
-            cfg,
-            EXTRACTOR_VERSION,
-            SIGNATURE_VERSION,
-            PIPELINE_LOGIC_VERSION,
-            use_extractor,
-        ),
+    mgr = CheckpointManager(spark, workdir, config_fingerprint(
+        cfg, EXTRACTOR_VERSION, SIGNATURE_VERSION, PIPELINE_LOGIC_VERSION,
+        use_extractor,
+    ))
+    out = _run_stages(
+        pages, cfg, use_extractor, _Checkpoint(mgr, n_score_buckets)
     )
-
-    docs = mgr.stage(
-        "docs", lambda: prepare_documents(pages, use_extractor=use_extractor)
-    )
-    prepped = mgr.stage("doc_tokens", lambda: prepare_tokens(docs))
-    cands = mgr.stage("candidates", lambda: candidate_pairs(docs, cfg))
-    verified = mgr.partitioned_stage(
-        "verified",
-        cands,
-        F.pmod(F.xxhash64("id_a", "id_b"), F.lit(n_score_buckets)),
-        n_score_buckets,
-        lambda part: verify_candidate_pairs(part, docs, cfg, prepped=prepped),
-    )
-
-    all_pairs = verified
-    if cfg.substring_enabled:
-        cheap_cc = mgr.stage(
-            "cheap_clusters",
-            # capped like run_pipeline's cheap_cc: a partially converged
-            # partition is finer but sound, so it only prunes less
-            lambda: connected_components(
-                verified.filter(F.col("score") >= cfg.cluster_threshold).select(
-                    "id_a", "id_b"
-                ),
-                max_iter=cfg.cheap_cc_max_iter,
-                edges_distinct=True,
-            ),
-        )
-        sub = mgr.stage(
-            "substring_pairs",
-            lambda: substring_pairs(
-                docs, cfg, exclude=verified, exclude_clusters=cheap_cc
-            ),
-        )
-        all_pairs = all_pairs.unionByName(sub)
-
-    def build_pairs():
-        prio = F.when(F.lit(False), F.lit(0))
-        for m, p in METHOD_PRIORITY.items():
-            prio = prio.when(F.col("method") == m, F.lit(p))
-        return first_wins_by_priority(
-            all_pairs.withColumn("priority", prio.otherwise(F.lit(99))),
-            METHOD_PRIORITY,
-        )
-
-    pairs = mgr.stage("pairs", build_pairs)
-
-    def build_clusters():
-        edges = pairs.filter(
-            (F.col("score") >= cfg.cluster_threshold)
-            | (F.col("method") == "substring")
-        )
-        cc = connected_components(
-            edges.select("id_a", "id_b"), edges_distinct=True
-        )
-        return (
-            docs.select("id", "url")
-            .join(cc, on="id", how="left")
-            .select(
-                "id",
-                "url",
-                F.coalesce(F.col("cluster_id"), F.col("id")).alias("cluster_id"),
-            )
-        )
-
-    clusters = mgr.stage("clusters", build_clusters)
-    return {
-        "docs": docs,
-        "pairs": pairs,
-        "clusters": clusters,
-        "lineage": mgr.counters(),
-    }
+    out["lineage"] = mgr.counters()
+    return out
