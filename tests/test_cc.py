@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import random
 
+from ufo_dedup_spark.operators import connected_components as cc_mod
 from ufo_dedup_spark.operators.connected_components import connected_components
 
 
@@ -64,7 +65,7 @@ def test_random_graph_matches_union_find(spark):
     assert got == expected
 
 
-def test_skew_path_equals_fast_path(spark):
+def test_skew_path_equals_fast_path(spark, monkeypatch):
     """A planted giant component (hub + chain segments) with the skew
     cutoff forced low must produce exactly the fast path's clusters: the
     two-phase-min star ops are a physical-plan change only."""
@@ -83,16 +84,28 @@ def test_skew_path_equals_fast_path(spark):
         edges.append((base + 1, base + 2))
 
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    fast = {
-        r["id"]: r["cluster_id"]
-        for r in connected_components(df, skew_degree_cutoff=10**9).collect()
-    }
-    skew = {
-        r["id"]: r["cluster_id"]
-        for r in connected_components(df, skew_degree_cutoff=10).collect()
-    }
+    skew_rounds = []
+    large_star_skew = cc_mod._large_star_skew
+    monkeypatch.setattr(
+        cc_mod,
+        "_large_star_skew",
+        lambda nbr: skew_rounds.append(1) or large_star_skew(nbr),
+    )
+
+    def run(cutoff):
+        monkeypatch.setattr(cc_mod, "SKEW_DEGREE_CUTOFF", cutoff)
+        return sorted(
+            (r["id"], r["cluster_id"])
+            for r in connected_components(df).collect()
+        )
+
+    fast = run(10**9)
+    assert not skew_rounds
+    skew = run(10)
+    assert skew_rounds
     assert fast == skew
-    assert skew[2999] == 0 and skew[10_001] == 10_000
+    labels = dict(skew)
+    assert labels[2999] == 0 and labels[10_001] == 10_000
 
 
 def test_shuffle_partitions_restored(spark):

@@ -3,8 +3,6 @@
 from __future__ import annotations
 
 import numpy as np
-import pytest
-from pyspark.sql import functions as F
 
 from ufo_dedup_spark.functions.hashing import (
     make_minhash_udf,
@@ -37,19 +35,23 @@ def test_minhash_udf_matches_reference_impl(spark):
 
 def test_empty_docs_never_generate_candidates(spark):
     """Empty/whitespace docs get NULL signatures and produce zero candidate
-    pairs through either LSH banding or SimHash chunk blocking."""
-    from ufo_dedup_spark.operators.minhash_lsh import (
-        lsh_candidate_pairs,
-        simhash_candidate_pairs,
-    )
+    pairs, both through LSH banding and through the pipeline's fused
+    candidate families (SimHash chunk blocking included). The texts are
+    distinct so the exact family cannot pair them either."""
+    from ufo_dedup_spark.operators.minhash_lsh import lsh_candidate_pairs
+    from ufo_dedup_spark.pipeline import PipelineConfig, candidate_pairs
 
     rows = [(i, "") for i in range(10)] + [(20, None), (21, "   ")]
     df = spark.createDataFrame(rows, "id long, text string")
     mh = make_minhash_udf(num_perm=16, shingle_k=2, seed=1)
-    sh = make_simhash_udf(shingle_k=2, seed=1)
-    signed = df.select("id", mh("text").alias("minhash"), sh("text").alias("simhash"))
+    signed = df.select("id", mh("text").alias("minhash"))
     assert lsh_candidate_pairs(signed, "id", "minhash", 4, 4).count() == 0
-    assert simhash_candidate_pairs(signed, "id", "simhash").count() == 0
+
+    tokenless = ["", " ", "  ", "\t", "\n", None]
+    docs = spark.createDataFrame(
+        list(enumerate(tokenless)), "id long, text string"
+    )
+    assert candidate_pairs(docs, PipelineConfig()).count() == 0
 
 
 def test_minhash_estimates_jaccard(spark):

@@ -435,6 +435,39 @@ def test_lcs_udf_evaluated_once(spark):
     assert plan.count("ArrowEvalPython") == 1
 
 
+def test_fast_lcs_len_matches_suffix_array_oracle():
+    """fast_lcs_len (the LCS UDF's kernel) must return the suffix-array
+    LCS length in UTF-8 bytes — the unit ``substring_min_span`` is measured
+    in — on ASCII and multi-byte text, for identical and empty inputs
+    too."""
+    import random
+
+    from ufo_dedup_spark.operators.substring import (
+        fast_lcs_len,
+        longest_common_substring_len,
+    )
+
+    rng = random.Random(11)
+    alphabets = ["ab c", "abcdefgh ", "aé日本 語ü", "日本語のテキスト"]
+    cjk = "日本語のテキスト" * 10
+    cases = [("", ""), ("", "abc"), ("abc", ""), ("x", "x"), (cjk, cjk)]
+    for _ in range(300):
+        alpha = rng.choice(alphabets)
+
+        def draw(n):
+            return "".join(rng.choice(alpha) for _ in range(n))
+
+        a, b = draw(rng.randrange(1, 120)), draw(rng.randrange(1, 120))
+        if rng.random() < 0.3:  # plant a shared span
+            span = draw(rng.randrange(1, 60))
+            a, b = a + span + draw(5), draw(5) + span + b
+        cases.append((a, b))
+        if rng.random() < 0.1:
+            cases.append((a, a))
+    for a, b in cases:
+        assert fast_lcs_len(a, b) == longest_common_substring_len(a, b), (a, b)
+
+
 def test_run_pipeline_rejects_conf_without_equals():
     """`--conf foo` is a usage error (exit 2) raised before any Spark
     session starts."""

@@ -104,10 +104,6 @@ def mufon_date_iso_col(raw: Column) -> Column:
     )
 
 
-def mufon_date_raw_col(raw: Column) -> Column:
-    return _nn(raw)
-
-
 # ---------------------------------------------------------------------------
 # UFOCAT
 # ---------------------------------------------------------------------------

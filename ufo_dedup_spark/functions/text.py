@@ -26,36 +26,6 @@ def tokens_col(text: Column) -> Column:
     return F.array_remove(F.split(F.lower(text), TOKEN_SPLIT_RE), "")
 
 
-def distinct_tokens_col(text: Column) -> Column:
-    """Distinct token set for Jaccard-style ops."""
-    return F.array_remove(F.array_distinct(F.split(F.lower(text), TOKEN_SPLIT_RE)), "")
-
-
-def token_count_col(text: Column) -> Column:
-    """Total token count (whitespace/punct split)."""
-    return F.size(tokens_col(text))
-
-
-def distinct_token_count_col(text: Column) -> Column:
-    return F.size(distinct_tokens_col(text))
-
-
-def token_jaccard_cols(text_a: Column, text_b: Column) -> Column:
-    """Native token-set Jaccard (ASCII tokenizer) as a Column expression.
-
-    The JVM-side analog of kernel.token_jaccard for pipelines that don't
-    need Python-regex parity; exact rational arithmetic so results are
-    bit-identical across engines.
-    """
-    ta = distinct_tokens_col(text_a)
-    tb = distinct_tokens_col(text_b)
-    inter = F.size(F.array_intersect(ta, tb))
-    union = F.size(ta) + F.size(tb) - inter
-    return F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(
-        F.lit(0.0)
-    )
-
-
 def fingerprint_col(text: Column) -> Column:
     """Deterministic document fingerprint: md5 of the normalized token stream.
 
@@ -63,24 +33,6 @@ def fingerprint_col(text: Column) -> Column:
     the exact-dedup key for the normalized-text variant.
     """
     return F.md5(F.array_join(tokens_col(text), " "))
-
-
-def stopword_ratio_col(text: Column) -> Column:
-    toks = tokens_col(text)
-    n_stop = F.size(
-        F.filter(toks, lambda t: t.isin(STOPWORDS))
-    )
-    return F.when(
-        F.size(toks) > 0, n_stop.cast("double") / F.size(toks).cast("double")
-    ).otherwise(F.lit(0.0))
-
-
-def avg_token_len_col(text: Column) -> Column:
-    toks = tokens_col(text)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(
-        F.size(toks) > 0, total.cast("double") / F.size(toks).cast("double")
-    ).otherwise(F.lit(0.0))
 
 
 # Marker-token language-ID profiles (Cavnar-Trenkle-style n-gram LID
@@ -224,18 +176,3 @@ def shingles_from_tokens_col(toks: Column, k: int = 3) -> Column:
     return F.when(n >= k, F.array_sort(F.array_distinct(grams))).otherwise(
         F.expr("CAST(array() AS ARRAY<BIGINT>)")
     )
-
-
-def quality_score_col(text: Column) -> Column:
-    """Heuristic [0,1] quality score: length factor x lexical diversity.
-
-    length factor = min(1, n_tokens/100); diversity = distinct/total tokens.
-    Frozen formula, mirrored in the oracle SQL.
-    """
-    n = token_count_col(text)
-    d = distinct_token_count_col(text)
-    length_factor = F.least(F.lit(1.0), n.cast("double") / F.lit(100.0))
-    diversity = F.when(n > 0, d.cast("double") / n.cast("double")).otherwise(
-        F.lit(0.0)
-    )
-    return F.round(length_factor * diversity, 6)

@@ -20,14 +20,14 @@ Skew note: a giant component concentrates its min-node's neighborhood into
 one window partition (linear in component size, never quadratic). Mitigated
 per round: the convergence-fingerprint job also measures the max
 neighborhood size, and any round whose hottest neighborhood exceeds
-``skew_degree_cutoff`` switches its star ops to the two-phase-min
+``SKEW_DEGREE_CUTOFF`` switches its star ops to the two-phase-min
 formulation (groupBy min — map-side partial aggregation splits the hot key
 across input partitions, the physical partition acting as the salt — then a
 join AQE can skew-split or broadcast). Small graphs keep the cheaper
 one-window fast path.
 
 Partition sizing: each round's shuffles run at a partition count matched to
-the measured live edge count (``target_rows_per_partition``), not the
+the measured live edge count (``TARGET_ROWS_PER_PARTITION``), not the
 session's ``spark.sql.shuffle.partitions`` — late rounds shrink toward a
 handful of edges, and scheduling 64 near-empty tasks per exchange, x4
 exchanges, x~10 rounds was pure driver overhead that DOUBLED final-CC time
@@ -44,6 +44,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# Memory-bound, not wall-time-bound: a window partition buffers the hot
+# neighborhood (~16B/row -> 5M rows ~ 80MB, safe inside an executor);
+# beyond it the hot task OOMs/straggles on a real cluster. Locally the
+# two-phase path measures ~2x slower at 500k members (one shared memory
+# space has no straggler penalty, so its extra exchanges are pure cost —
+# BENCH.md:356), which is why the cutoff stays high rather than 0.
+SKEW_DEGREE_CUTOFF = 5_000_000
+TARGET_ROWS_PER_PARTITION = 250_000
 
 
 def _both_dirs(uv: DataFrame) -> DataFrame:
@@ -127,16 +136,6 @@ def _small_star_skew(nbr: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
-    rounds_per_check: int = 1,
-    target_rows_per_partition: int = 250_000,
-    # memory-bound, not wall-time-bound: a window partition buffers the hot
-    # neighborhood (~16B/row -> 5M rows ~ 80MB, safe inside an executor);
-    # beyond it the hot task OOMs/straggles on a real cluster. Locally the
-    # two-phase path measures ~2x slower at 500k members (one shared
-    # memory space has no straggler penalty, so its extra exchanges are
-    # pure cost — scripts/cc_skew_bench.py), which is why the cutoff stays
-    # high rather than 0.
-    skew_degree_cutoff: int = 5_000_000,
     stats: dict | None = None,
     edges_distinct: bool = False,
 ) -> DataFrame:
@@ -173,19 +172,16 @@ def connected_components(
     eager-checkpoint formulation. The same job measures edge count (->
     next round's shuffle-partition count) and max neighborhood size (->
     next round's star implementation, window fast path vs two-phase-min
-    skew path above ``skew_degree_cutoff``).
+    skew path above ``SKEW_DEGREE_CUTOFF``).
 
     ``spark.sql.shuffle.partitions`` is temporarily overridden per round
     and restored on exit; CC is a serial stage in the pipeline, so no
     concurrently-planned job observes the override.
 
-    ``rounds_per_check`` fuses N star rounds per materialization +
-    fingerprint. Measured on this engine it LOSES at N=2 (the un-truncated
-    second round recomputes the first round's stars at every self-
-    reference, 4.5x slower on the pipeline's CC stages), so the default
-    stays 1; the knob remains for edge lists whose shuffle cost dwarfs
-    their compute (converged sets are fixed points, so correctness is
-    unaffected by extra rounds).
+    One star round per materialization + fingerprint: fusing two rounds
+    per check measured 4.5x slower on the pipeline's CC stages (the
+    un-truncated second round recomputes the first round's stars at every
+    self-reference).
     """
     spark = edges.sparkSession
     uv = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
@@ -223,7 +219,7 @@ def connected_components(
 
     def _round_partitions(n_edges: int) -> int:
         cores = spark.sparkContext.defaultParallelism
-        need = -(-max(1, n_edges) // target_rows_per_partition)  # ceil
+        need = -(-max(1, n_edges) // TARGET_ROWS_PER_PARTITION)  # ceil
         return max(min(8, cores), min(need, saved_parts))
 
     saved_conf = spark.conf.get("spark.sql.shuffle.partitions")
@@ -243,20 +239,19 @@ def connected_components(
         # Giant graphs (count above the cutoff) pay one extra degree job
         # over the already-materialized nbr.
         fp, max_deg = _fingerprint(nbr, False)  # materializes nbr
-        if fp[0] > skew_degree_cutoff:
+        if fp[0] > SKEW_DEGREE_CUTOFF:
             _, max_deg = _fingerprint(nbr, True)
         if stats is not None:
             stats["entry_edges"] = fp[0]
             stats["rounds"] = 0
             stats["converged"] = False
-        for _ in range(0, max_iter, max(1, rounds_per_check)):
+        for _ in range(max_iter):
             spark.conf.set(
                 "spark.sql.shuffle.partitions", str(_round_partitions(fp[0]))
             )
-            large = _large_star_skew if max_deg > skew_degree_cutoff else _large_star
-            small = _small_star_skew if max_deg > skew_degree_cutoff else _small_star
-            for _r in range(max(1, rounds_per_check)):
-                nbr = _both_dirs(small(_both_dirs(large(nbr))))
+            large = _large_star_skew if max_deg > SKEW_DEGREE_CUTOFF else _large_star
+            small = _small_star_skew if max_deg > SKEW_DEGREE_CUTOFF else _small_star
+            nbr = _both_dirs(small(_both_dirs(large(nbr))))
             nbr = nbr.localCheckpoint(eager=False)
             # materializes this round; degree stats only while the edge set
             # is big enough that a neighborhood could exceed the cutoff.
@@ -267,15 +262,10 @@ def connected_components(
             # the cutoff from just below would skip degree measurement and
             # the NEXT round would run the window fast path on a hot
             # neighborhood above the cutoff (the OOM/straggler case the
-            # cutoff exists to prevent). With rounds_per_check > 1 several
-            # star rounds run between fingerprints, so the growth compounds:
-            # the margin scales as 2^rounds_per_check.
-            margin = 2 ** max(1, rounds_per_check)
-            fp2, max_deg = _fingerprint(
-                nbr, margin * fp[0] > skew_degree_cutoff
-            )
+            # cutoff exists to prevent).
+            fp2, max_deg = _fingerprint(nbr, 2 * fp[0] > SKEW_DEGREE_CUTOFF)
             if stats is not None:
-                stats["rounds"] += max(1, rounds_per_check)
+                stats["rounds"] += 1
                 stats["final_edges"] = fp2[0]
             if fp2 == fp:
                 if stats is not None:

@@ -152,19 +152,11 @@ def lsh_candidate_pairs(
     bands: int = 32,
     rows_per_band: int = 4,
     all_pairs_cap: int = 64,
-    distinct: bool = True,
 ) -> DataFrame:
     """Distinct candidate pairs from MinHash LSH banding.
 
     NULL signatures (empty docs) are dropped before banding — they carry no
     content to match and would otherwise co-bucket in every band.
-
-    ``distinct=False`` skips the final dedup exchange for callers that feed
-    the pairs into their OWN pair-keyed aggregation (the pipeline's
-    method-priority groupBy): the same pair surfacing in several bands is
-    then collapsed by the consumer's map-side partial aggregation instead
-    of a dedicated shuffle — one full exchange of the pair table saved,
-    identical downstream results.
     """
     docs = docs.filter(F.col(sig_col).isNotNull())
     # NOT materialized: pairs_within_groups scans the band table twice
@@ -182,51 +174,5 @@ def lsh_candidate_pairs(
         buckets, ["band_idx", "band_hash"], "_id", all_pairs_cap
     )
     # a pair can surface in several bands — dedupe before expensive verify
-    out = pairs.select("id_a", "id_b")
-    return out.distinct() if distinct else out
+    return pairs.select("id_a", "id_b").distinct()
 
-
-def simhash_candidate_pairs(
-    docs: DataFrame,
-    id_col: str = "id",
-    fp_col: str = "simhash",
-    n_chunks: int = 4,
-    max_hamming: int = 3,
-    all_pairs_cap: int = 64,
-    distinct: bool = True,
-) -> DataFrame:
-    """SimHash near-dup candidates: block on 16-bit fingerprint chunks
-    (pigeonhole: hamming <= n_chunks-1 guarantees one identical chunk),
-    then verify Hamming distance natively via bit_count(xor).
-
-    ``distinct=False``: same contract as lsh_candidate_pairs — the caller's
-    pair-keyed aggregation dedupes, saving the dedicated exchange.
-    """
-    chunk_bits = 64 // n_chunks
-    mask = (1 << chunk_bits) - 1
-    # NULL fingerprints (empty docs) never enter a chunk block
-    docs = docs.filter(F.col(fp_col).isNotNull())
-    # not materialized — same reasoning as the LSH band table above
-    chunks = docs.select(
-        F.col(id_col).alias("_id"),
-        F.col(fp_col).alias("_fp"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col(fp_col), i * chunk_bits).bitwiseAND(
-                        F.lit(mask)
-                    )
-                    for i in range(n_chunks)
-                ]
-            )
-        ).alias("chunk_idx", "chunk_val"),
-    )
-    pairs = pairs_within_groups(
-        chunks, ["chunk_idx", "chunk_val"], "_id", all_pairs_cap,
-        extra_cols=["_fp"],
-    )
-    verified = pairs.filter(
-        F.bit_count(F.col("_fp_a").bitwiseXOR(F.col("_fp_b"))) <= max_hamming
-    )
-    out = verified.select("id_a", "id_b")
-    return out.distinct() if distinct else out

@@ -12,7 +12,7 @@ Re-expresses the reference's SQLite mechanics declaratively:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -211,10 +211,3 @@ def verification_report(pairs: DataFrame) -> DataFrame:
     )
     return methods.unionByName(buckets).unionByName(participants)
 
-
-def top_pairs(pairs: DataFrame, k: int = 10) -> DataFrame:
-    """Top-k by score (dedup.py:648-663) — TakeOrderedAndProject, no full
-    sort. Deterministic tie-break on the pair ids."""
-    return pairs.orderBy(
-        F.col("score").desc(), F.col("id_a").asc(), F.col("id_b").asc()
-    ).limit(k)

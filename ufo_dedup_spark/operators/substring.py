@@ -138,10 +138,10 @@ def fast_lcs_len(a: str, b: str) -> int:
 
     if not a or not b:
         return 0
-    if a == b:
-        return len(a)
     ab = a.encode("utf-8", "surrogatepass")
     bb = b.encode("utf-8", "surrogatepass")
+    if ab == bb:
+        return len(ab)
     xa = np.frombuffer(ab, dtype=np.uint8).astype(np.uint64)
     xb = np.frombuffer(bb, dtype=np.uint8).astype(np.uint64)
 
@@ -234,7 +234,8 @@ def verify_substring_pairs(
     text_col: str = "text",
     min_span: int = 200,
 ) -> DataFrame:
-    """Join texts back and keep pairs whose true LCS >= min_span chars.
+    """Join texts back and keep pairs whose true LCS >= min_span UTF-8
+    bytes.
 
     Returns (id_a, id_b, lcs_len).
     """

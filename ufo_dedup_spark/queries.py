@@ -234,7 +234,7 @@ def customer_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch analog of the streaming tumbling-window aggregation."""
+    """Hourly tumbling-window event counts per event type."""
     e = _read(spark, sf_dir, "events")
     return (
         e.groupBy(

@@ -225,15 +225,6 @@ def ground_truth(cfg: SynthConfig):
     return pairs, clusters
 
 
-def generate_corpus(cfg: SynthConfig | None = None):
-    """Driver-side generation (small n, unit tests): identical bytes to the
-    distributed path."""
-    cfg = cfg or SynthConfig()
-    pages = [row_for_index(cfg, i) for i in range(cfg.n_docs)]
-    tp, tc = ground_truth(cfg)
-    return pages, tp, tc
-
-
 def corpus_dataframes(spark, cfg: SynthConfig | None = None):
     """(pages, truth_pairs, truth_clusters) DataFrames; pages generated
     DISTRIBUTED via mapInPandas over spark.range(n_docs)."""
