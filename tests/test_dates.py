@@ -8,17 +8,12 @@ reproduces the reference parser's output on every pinned case.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from ufo_dedup_spark.functions.dates import (
     geldreich_date_iso_col,
-    geldreich_date_raw_col,
     mufon_date_iso_col,
     nuforc_date_iso_col,
-    nuforc_date_raw_col,
-    safe_float_col,
-    safe_int_col,
     ufocat_date_col,
     updb_date_iso_col,
 )
@@ -106,12 +101,6 @@ def test_nuforc_pinned(spark):
     _run_single(spark, NUFORC_CASES, nuforc_date_iso_col)
 
 
-def test_nuforc_raw_preserved(spark):
-    df = spark.createDataFrame([(" 1995-02-02 23:00 Local",)], "raw string")
-    out = df.select(nuforc_date_raw_col(F.col("raw")).alias("r")).collect()[0]["r"]
-    assert out == "1995-02-02 23:00 Local"
-
-
 def test_mufon_pinned(spark):
     _run_single(spark, MUFON_CASES, mufon_date_iso_col)
 
@@ -140,52 +129,3 @@ def test_updb_pinned(spark):
 
 def test_geldreich_pinned(spark):
     _run_single(spark, GELDREICH_CASES, geldreich_date_iso_col)
-
-
-def test_geldreich_raw_preserved(spark):
-    df = spark.createDataFrame([("Summer 1947",), ("?",)], "raw string")
-    out = [
-        r["r"]
-        for r in df.select(geldreich_date_raw_col(F.col("raw")).alias("r")).collect()
-    ]
-    assert out == ["Summer 1947", "?"]
-
-
-SAFE_INT_CASES = [
-    ("42", 42),
-    ("42.0", 42),
-    ("3.7", 3),  # int(float('3.7')) truncates
-    (None, None),
-    ("", None),
-    ("abc", None),
-    ("-5", -5),
-]
-
-SAFE_FLOAT_CASES = [
-    ("33.45", 33.45),
-    ("0", None),  # UFOCAT zero-means-unknown sentinel
-    ("0.0", None),
-    (None, None),
-    ("", None),
-    ("abc", None),
-    ("-111.95", -111.95),
-]
-
-
-def test_safe_int_pinned(spark):
-    _run_single(spark, SAFE_INT_CASES, safe_int_col)
-
-
-def test_safe_float_pinned(spark):
-    df = spark.createDataFrame(
-        [(i, c) for i, (c, _) in enumerate(SAFE_FLOAT_CASES)], "i int, raw string"
-    )
-    got = {
-        r["i"]: r["out"]
-        for r in df.select("i", safe_float_col(F.col("raw")).alias("out")).collect()
-    }
-    for i, (inp, expected) in enumerate(SAFE_FLOAT_CASES):
-        if expected is None:
-            assert got[i] is None, f"{inp!r}: {got[i]!r}"
-        else:
-            assert got[i] == pytest.approx(expected), f"{inp!r}: {got[i]!r}"

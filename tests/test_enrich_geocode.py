@@ -6,15 +6,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ufo_dedup_spark.operators.enrich import (
-    enrich_fill_nulls,
-    enrichment_counters,
-)
+from ufo_dedup_spark.operators.enrich import enrich_fill_nulls
 from ufo_dedup_spark.operators.geocode import (
     geocode_cascade,
     normalize_country_col,
     normalize_state_col,
-    parse_raw_location_cols,
 )
 
 
@@ -73,18 +69,6 @@ def test_enrich_fills_only_nulls(spark):
     assert (rows[4]["hynek"], rows[4]["vallee"], rows[4]["shape"]) == (
         None, "MA1", "Light",
     )
-
-
-def test_enrichment_counters(spark):
-    target, sidecar = _enrich_frames(spark)
-    out = enrich_fill_nulls(
-        target, sidecar,
-        keys=["date10", "city", "state"],
-        fill_cols=["hynek", "vallee", "shape"],
-        order_col="sid",
-    )
-    counts = enrichment_counters(target, out, "id", ["hynek", "vallee", "shape"])
-    assert counts == {"hynek": 1, "vallee": 2, "shape": 1}
 
 
 def test_enrich_no_shuffle_on_target(spark):
@@ -203,23 +187,3 @@ def test_normalize_state_pinned(spark):
         ).collect()
     ]
     assert got == ["08", "ON", "TX", None]
-
-
-def test_parse_raw_location_pinned(spark):
-    cases = [
-        ("ITALY, ROME", ("ROME", None, "IT")),
-        ("Rome, Italy", ("Rome", None, "IT")),
-        ("Houston, TX", ("Houston", "TX", "US")),
-        ("China", (None, None, "CN")),
-        ("Paris, xq", ("Paris", "XQ", "US")),  # 2 letters -> US-state branch
-        ("a, b, Canada", ("a", "b", "CA")),
-        ("", (None, None, None)),
-        (None, (None, None, None)),
-    ]
-    df = spark.createDataFrame([(c,) for c, _ in cases], "raw string")
-    city, state, country = parse_raw_location_cols(F.col("raw"))
-    got = df.select(
-        city.alias("c"), state.alias("s"), country.alias("k")
-    ).collect()
-    for (inp, expected), r in zip(cases, got):
-        assert (r["c"], r["s"], r["k"]) == expected, inp

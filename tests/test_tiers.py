@@ -7,12 +7,14 @@ spec-derived single-process oracle (oracle_tiers.py).
 
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from oracle_tiers import oracle_all_tiers
+from test_entry import SF_DIR
+from ufo_dedup_spark import queries as Q
 from ufo_dedup_spark.kernel import (
     SRC_MUFON,
     SRC_NUFORC,
@@ -258,3 +260,45 @@ def test_pipeline_matches_oracle(spark, seed):
         g_score, g_method = got[k]
         assert g_method == method, (k, g_method, method)
         assert g_score == pytest.approx(score), (k, g_score, score)
+
+
+def _executed_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_run_all_tiers_plan_hash_aggregates_uncached(spark):
+    """First-tier-wins is one hash aggregation with scalar buffers (no
+    SortAggregate over a struct) and nothing is cached (no persist whose
+    unpersist nobody owns)."""
+    plan = _executed_plan(tiers.run_all_tiers(*to_dfs(spark, random_rows(7, 40))))
+    assert "HashAggregate" in plan
+    assert "SortAggregate" not in plan
+    assert "InMemoryRelation" not in plan
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="driver testdata absent")
+def test_sighting_tier_pairs_query_matches_oracle(spark):
+    """The registered query equals the spec oracle run on the same
+    documents-derived rows, and the derivation reaches tiers 1a, 2 and 3."""
+    sight, loc = Q._tier_frames(spark, SF_DIR)
+    joined = sight.join(
+        loc.withColumnRenamed("id", "location_id"), "location_id"
+    ).collect()
+    rows = [
+        make_row(
+            r["id"], r["source_db_id"], r["date_event"], city=r["city"],
+            state=r["state"], country=r["country"], desc=r["description"],
+            raw=r["raw_text"],
+        )
+        for r in joined
+    ]
+    expected = oracle_all_tiers(rows)
+    got = collected(Q.queries()["sighting_tier_pairs"](spark, SF_DIR))
+    assert set(got) == set(expected)
+    for k, (score, method) in expected.items():
+        assert got[k][1] == method, (k, got[k][1], method)
+        assert got[k][0] == pytest.approx(score), (k, got[k][0], score)
+    methods = {m for _, m in got.values()}
+    assert "tier1a_mufon_nuforc" in methods
+    assert any(m.startswith("tier2") for m in methods)
+    assert "tier3_desc_fuzzy" in methods

@@ -15,7 +15,7 @@ The package is organized as:
   kernel.py     pure-Python reference-parity similarity kernel (no Spark deps)
   functions/    Column expressions + pandas UDFs
   operators/    composable DataFrame operators (blocking, tiers, lsh, cc, ...)
-  sources/      readers & checkpointed writers
+  sources/      table IO (Iceberg identifier or parquet path)
   pipeline.py   end-to-end web-page dedup pipeline
   synth.py      deterministic synthetic web corpus with planted ground truth
 """

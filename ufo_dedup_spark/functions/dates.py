@@ -30,12 +30,6 @@ NUFORC_TZ_TOKENS = ("Local", "Pacific", "Eastern", "Central", "Mountain",
                     "UTC", "GMT")
 
 
-def _nn(c: Column) -> Column:
-    """NULL-safe empty guard: NULL for NULL-or-whitespace-only input."""
-    t = F.trim(c)
-    return F.when(t != F.lit(""), t)
-
-
 # ---------------------------------------------------------------------------
 # NUFORC
 # ---------------------------------------------------------------------------
@@ -63,11 +57,6 @@ def nuforc_date_iso_col(raw: Column) -> Column:
             ),
         ),
     )
-
-
-def nuforc_date_raw_col(raw: Column) -> Column:
-    """The preserved raw string: trimmed original, NULL if empty."""
-    return _nn(raw)
 
 
 # ---------------------------------------------------------------------------
@@ -161,25 +150,6 @@ def ufocat_date_col(
     return F.when(parseable, with_time)
 
 
-def safe_int_col(c: Column) -> Column:
-    """int(float(x)) with NULL on junk — the importers' safe_int
-    (import_ufocat.py:64-72): '42.0' -> 42, '' / 'abc' / NULL -> NULL."""
-    t = F.trim(c.cast("string"))
-    return F.when(
-        t.rlike(r"^-?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$"), t.cast("double")
-    ).cast("int")
-
-
-def safe_float_col(c: Column) -> Column:
-    """float(x) with NULL on junk AND on exact 0.0 — UFOCAT uses 0 for
-    unknown coordinates (import_ufocat.py:75-88)."""
-    t = F.trim(c.cast("string"))
-    v = F.when(
-        t.rlike(r"^-?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$"), t.cast("double")
-    )
-    return F.when(v != 0.0, v)
-
-
 # ---------------------------------------------------------------------------
 # UPDB
 # ---------------------------------------------------------------------------
@@ -270,7 +240,3 @@ def geldreich_date_iso_col(raw: Column) -> Column:
         )
         .when(d.rlike(r"^(\d{4})-(\d{2})-(\d{2})"), F.substring(d, 1, 10))
     )
-
-
-def geldreich_date_raw_col(raw: Column) -> Column:
-    return _nn(raw)

@@ -2,12 +2,13 @@
 
 Each function mirrors a pure-Python kernel function (kernel.py) as a Catalyst
 Column expression, so blocking keys are computed inside whole-stage codegen
-with zero Python involvement. The pandas-UDF scoring kernel re-applies its own
-strips, so any (theoretical) unicode-whitespace divergence between Java and
-Python regex classes can only affect blocking keys, never scores.
+with zero Python involvement. The description strips (dedup.py:53-69) stay
+in the pandas-UDF scoring kernel, so any (theoretical) unicode-whitespace
+divergence between Java and Python regex classes can only affect blocking
+keys, never scores.
 
-Reference semantics: dedup.py:53-69 (strips), 127-148 (city/state) — see
-kernel.py for the pinned behavior table.
+Reference semantics: dedup.py:127-148 (city/state) — see kernel.py for the
+pinned behavior table.
 """
 
 from __future__ import annotations
@@ -33,29 +34,6 @@ def normalize_city_col(city: Column) -> Column:
 def normalize_state_col(state: Column) -> Column:
     """Upper-cased trimmed state code; '' for NULL (dedup.py:191)."""
     return F.upper(F.trim(F.coalesce(state, F.lit(""))))
-
-
-def strip_nuforc_prefix_col(desc: Column) -> Column:
-    """Remove a leading 'NUFORC UFO Sighting <digits>' tag (dedup.py:53-59)."""
-    return F.when(
-        desc.startswith("NUFORC UFO Sighting"),
-        F.trim(F.regexp_replace(desc, r"^NUFORC UFO Sighting \d+\s*", "")),
-    ).otherwise(desc)
-
-
-def strip_mufon_boilerplate_col(desc: Column) -> Column:
-    """Keep the investigator-notes tail of MUFON template text (dedup.py:62-69).
-
-    Marker must appear within the first 60 chars; absent notes header keeps
-    the text unchanged (regexp_extract returns '' on no-match).
-    """
-    tail = F.regexp_extract(
-        desc, r"(?s)Investigators?\s*Not(?:es?)?[.:,]?\s*(.+)", 1
-    )
-    has_marker = (
-        F.instr(F.substring(desc, 1, 60), "Submitted by razor via e-mail") > 0
-    )
-    return F.when(has_marker & (tail != F.lit("")), F.trim(tail)).otherwise(desc)
 
 
 def parse_ufosearch_city_col(raw_text: Column) -> Column:

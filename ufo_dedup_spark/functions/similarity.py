@@ -46,14 +46,6 @@ def similarity_udf(
 
 
 @pandas_udf(DoubleType())
-def token_jaccard_udf(desc_a: pd.Series, desc_b: pd.Series) -> pd.Series:
-    """token_jaccard over an Arrow batch (reference dedup.py:72-83)."""
-    jac = kernel.token_jaccard
-    out = [jac(_opt_str(a), _opt_str(b)) for a, b in zip(desc_a, desc_b)]
-    return pd.Series(out, dtype="float64")
-
-
-@pandas_udf(DoubleType())
 def tier3_score_udf(
     desc_a: pd.Series, desc_b: pd.Series, src_a: pd.Series, src_b: pd.Series
 ) -> pd.Series:

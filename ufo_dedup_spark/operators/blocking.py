@@ -1,29 +1,18 @@
-"""Blocking utilities: block-size statistics, caps, and skew salting.
+"""Blocking admission: which blocking keys may enter a self-join.
 
 The quadratic hazard of blocking-based dedup: an equi-join on a blocking key
 produces |block|^2 pairs per key, and AQE's skew-join splitting only splits
 *partitions*, not the quadratic blow-up itself. So block control happens
-BEFORE the join (SURVEY.md §4 "Skew guard"):
-
-- ``block_sizes``: cheap partial+final agg of rows per key
-- ``cap_blocks``: drop keys whose block exceeds a cap (the reference's
-  tier-3 "<= 20 rows per date" rule, dedup.py:505-515, generalized) —
-  dropped keys are observable via ``dropped_blocks`` for counters
-- ``salt_blocks``: deterministically split an oversized block into sub-blocks
-  for pair generation that must not drop data (LSH buckets): pairs within a
-  sub-block are still generated; cross-sub-block pairs are traded for bounded
-  memory/CPU, which is the standard LSH-bucket-cap tradeoff.
+BEFORE the join (SURVEY.md §4 "Skew guard"): ``admitted_blocks`` is one
+partial+final aggregation of rows (and distinct sources) per key, and the
+caller semi-joins its rows to the admitted keys — the reference's tier-3
+"<= 20 rows, >= 2 sources per date" rule (dedup.py:505-515), generalized.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def block_sizes(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Rows per blocking key (map-side partial agg + final agg)."""
-    return df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("block_n"))
 
 
 def admitted_blocks(
@@ -44,45 +33,3 @@ def admitted_blocks(
     if min_distinct is not None:
         out = out.filter(F.col("distinct_n") >= min_distinct[1])
     return out.select(*key_cols)
-
-
-def cap_blocks(
-    df: DataFrame, key_cols: list[str], max_rows: int
-) -> tuple[DataFrame, DataFrame]:
-    """Split ``df`` into (rows in blocks <= max_rows, rows in oversized blocks).
-
-    The oversized remainder is returned, not silently dropped, so callers can
-    log counters (no-silent-caps rule) or route it to a salted path.
-    """
-    sizes = block_sizes(df, key_cols)
-    with_n = df.join(sizes, on=key_cols, how="inner")
-    kept = with_n.filter(F.col("block_n") <= max_rows).drop("block_n")
-    dropped = with_n.filter(F.col("block_n") > max_rows).drop("block_n")
-    return kept, dropped
-
-
-def salt_blocks(
-    df: DataFrame,
-    key_cols: list[str],
-    id_col: str,
-    max_rows: int,
-    salt_col: str = "block_salt",
-) -> DataFrame:
-    """Add a deterministic sub-block salt so no (key, salt) group exceeds
-    ~max_rows rows.
-
-    Salt = xxhash64(id) mod ceil(block_n / max_rows): deterministic across
-    runs (resume-safe), uniform within a block. Joining on
-    key_cols + [salt_col] bounds per-task pair fan-out for hot keys (skewed
-    hosts / boilerplate-heavy LSH buckets).
-    """
-    sizes = block_sizes(df, key_cols)
-    n_sub = F.greatest(F.lit(1), F.ceil(F.col("block_n") / F.lit(max_rows)))
-    return (
-        df.join(sizes, on=key_cols, how="inner")
-        .withColumn(
-            salt_col,
-            F.pmod(F.xxhash64(F.col(id_col)), n_sub).cast("int"),
-        )
-        .drop("block_n")
-    )

@@ -62,27 +62,3 @@ def enrich_fill_nulls(
         c: F.coalesce(F.col(c), F.col(f"_enrich_{c}")) for c in fill_cols
     }
     return out.withColumns(filled).drop(*[f"_enrich_{c}" for c in fill_cols])
-
-
-def enrichment_counters(
-    target: DataFrame,
-    enriched: DataFrame,
-    id_col: str,
-    fill_cols: list[str],
-) -> dict[str, int]:
-    """Transfer counts per fill column (the reference's printed summary:
-    enrich.py:150-162) — one aggregation job."""
-    t = target.select(
-        id_col, *[F.col(c).alias(f"_before_{c}") for c in fill_cols]
-    )
-    j = enriched.select(id_col, *fill_cols).join(t, on=id_col)
-    aggs = [
-        F.sum(
-            (
-                F.col(f"_before_{c}").isNull() & F.col(c).isNotNull()
-            ).cast("long")
-        ).alias(c)
-        for c in fill_cols
-    ]
-    row = j.agg(*aggs).collect()[0]
-    return {c: int(row[c] or 0) for c in fill_cols}

@@ -6,8 +6,7 @@ Reference semantics (reference geocode.py:121-131, 159-200):
   2. city_country (city, country)               -> highest-pop entry
   3. city_only    (city)                        -> highest-pop entry,
      skipping placeholder city names ('UNKNOWN', 'N/A', ...)
-plus the country/state normalization maps (geocode.py:28-56) and the
-raw-text location parser fallback (geocode.py:206-254).
+plus the country/state normalization maps (geocode.py:28-56).
 
 Spark-first shape: each strategy is a pre-aggregated one-row-per-key
 dimension (max-pop pick via row_number, deterministically tie-broken) that
@@ -93,48 +92,6 @@ def _best_per_key(gaz: DataFrame, keys: list[str]) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .select(*keys, "lat", "lng")
     )
-
-
-def parse_raw_location_cols(raw_text: Column) -> tuple[Column, Column, Column]:
-    """(city, state, country) parsed from free text (geocode.py:206-254):
-    'ITALY, ROME' / 'Rome, Italy' / 'Houston, TX' / 'China' forms."""
-    t = F.trim(raw_text)
-    n_parts = F.size(F.split(t, ","))
-    p1 = F.trim(F.split_part(t, F.lit(","), F.lit(1)))
-    p2 = F.trim(F.split_part(t, F.lit(","), F.lit(2)))
-    p3 = F.trim(F.split_part(t, F.lit(","), F.lit(3)))
-
-    c1 = normalize_country_col(p1)
-    c2 = normalize_country_col(p2)
-    is_country_1 = (F.length(c1) == 2) & (F.length(p1) > 2)
-    is_country_2 = (F.length(c2) == 2) & (F.length(p2) > 2)
-    is_state_2 = F.upper(p2).rlike(r"^[A-Z]{2}$")
-
-    city = (
-        F.when(t.isNull() | (t == ""), F.lit(None).cast("string"))
-        .when(n_parts == 1, F.lit(None).cast("string"))
-        .when(n_parts == 2,
-              F.when(is_country_1, p2).otherwise(p1))
-        .when(n_parts == 3, p1)
-    )
-    state = (
-        F.when(n_parts == 2,
-               F.when(~is_country_1 & ~is_country_2 & is_state_2, F.upper(p2)))
-        .when(n_parts == 3, p2)
-    )
-    country = (
-        F.when(t.isNull() | (t == ""), F.lit(None).cast("string"))
-        .when(n_parts == 1, F.when(F.length(c1) == 2, c1))
-        .when(
-            n_parts == 2,
-            F.when(is_country_1, c1)
-            .when(is_country_2, c2)
-            .when(is_state_2, F.lit("US"))
-            .when(F.length(p2) == 2, F.upper(p2)),
-        )
-        .when(n_parts == 3, normalize_country_col(p3))
-    )
-    return city, state, country
 
 
 def geocode_cascade(

@@ -4,9 +4,10 @@ Re-expresses the reference's SQLite mechanics declaratively:
 - ``a < b`` invariant + self-pair drop (reference insert_candidates,
   dedup.py:237-258) -> least/greatest + filter
 - UNIQUE(a,b) + INSERT OR IGNORE with tiers running in sequence ("first tier
-  to claim a pair wins its method label") -> ONE window pass over the union of
-  all tiers' candidates ranked by tier priority, instead of N sequential
-  anti-joins. Same final table, one shuffle.
+  to claim a pair wins its method label") -> ONE hash aggregation over the
+  union of all tiers' candidates ranked by tier priority
+  (``first_wins_by_priority``), instead of N sequential anti-joins. Same
+  final table, one shuffle.
 - verification aggregations (dedup.py:598-687) as groupBy jobs.
 """
 
@@ -28,49 +29,24 @@ def canonicalize_pairs(
     )
 
 
-def first_wins(pairs: DataFrame, priority_col: str = "priority") -> DataFrame:
-    """Keep one row per (id_a, id_b): lowest priority value wins.
-
-    Declarative equivalent of running tiers sequentially with
-    INSERT OR IGNORE (dedup.py:254-258): priority encodes tier order, the
-    deterministic tie-break (method, -score) pins behavior the reference
-    leaves to insertion order.
-    """
-    # hash aggregation (min_by on a struct ordering key), not a row_number
-    # window: same winner, but a partial-aggregating shuffle instead of a
-    # full sort of the pair table — one less exchange and map-side combine
-    # at scale
-    # -coalesce(score, -inf): in struct ordering NULL sorts smallest, so a
-    # bare -score would let a NULL-score row WIN its (priority, method) tie;
-    # the window formulation this replaced put nulls last — preserve that
-    order_key = F.struct(
-        F.col(priority_col),
-        F.col("method"),
-        (-F.coalesce(F.col("score"), F.lit(float("-inf")))).alias("_ns"),
-    )
-    payload_cols = [
-        c for c in pairs.columns if c not in ("id_a", "id_b", priority_col)
-    ]
-    won = pairs.groupBy("id_a", "id_b").agg(
-        F.min_by(F.struct(*payload_cols), order_key).alias("_w")
-    )
-    return won.select("id_a", "id_b", "_w.*")
-
-
 def first_wins_by_priority(
     pairs: DataFrame,
     method_by_priority: dict[str, int],
     status: str = "pending",
     priority_col: str = "priority",
 ) -> DataFrame:
-    """first_wins specialized to the pipeline's pair shape — identical
-    output, hash-aggregable plan.
+    """Keep one row per (id_a, id_b): the lowest priority value wins.
 
-    Preconditions (the pipeline satisfies both by construction):
+    Declarative equivalent of running tiers sequentially with
+    INSERT OR IGNORE (dedup.py:254-258): priority encodes tier order;
+    among rows of the winning priority the highest score wins.
+
+    Preconditions (the pipeline and tiers.run_all_tiers satisfy both by
+    construction):
     - ``method`` <-> ``priority`` is a bijection given by
       ``method_by_priority`` (every input row's method is in the dict;
       a pair won by a priority outside it raises at collection), so
-      the generic tie-break ``(priority, method, -score)`` reduces to
+      the general tie-break ``(priority, method, -score)`` reduces to
       ``(priority, -score)`` and the winning method can be DECODED from the
       winning priority after the aggregation;
     - ``status`` is the same constant on every row.
@@ -86,7 +62,7 @@ def first_wins_by_priority(
     sorts, and the winning score is the per-level max itself — no float
     encode/decode round trip. A pair whose winning-priority rows all have
     NULL score keeps a NULL score (max ignores NULLs), matching the
-    generic tie-break where NULL sorts last.
+    general tie-break where NULL sorts last.
     """
     prios = sorted(set(method_by_priority.values()))
     aggs = [F.min(F.col(priority_col)).alias("_p")] + [

@@ -9,15 +9,16 @@ Reference dataflow (dedup.py:283-595) re-expressed Spark-first:
   -> ``keyed_sightings``: projection + Column-expression normalization,
   all inside whole-stage codegen; location dim joined via broadcast
 - compute_similarity per pair -> Arrow-batched pandas UDF on join output
-- INSERT OR IGNORE first-tier-wins -> priority window (pairs.first_wins)
+- INSERT OR IGNORE first-tier-wins -> one hash aggregation over the union
+  of all tiers, ranked by TIER_METHOD_PRIORITY
+  (pairs.first_wins_by_priority)
 - tier-3 date-block admission (<=20 rows, >=2 sources, dedup.py:505-515)
   -> pre-aggregation + semi-join BEFORE the self-join, capping the quadratic
   fan-out at the source (AQE can't do this — it splits partitions, not
   pair blow-ups)
 
 Scale notes: blocking keys are the shuffle keys; the fact->dim join
-broadcasts; scoring happens only on join survivors; each tier's output should
-be checkpointed (sources/writers.py) at 10^12-doc scale.
+broadcasts; scoring happens only on join survivors.
 """
 
 from __future__ import annotations
@@ -39,10 +40,25 @@ from ufo_dedup_spark.operators.blocking import admitted_blocks
 from ufo_dedup_spark.operators.pairs import (
     anti_join_existing,
     canonicalize_pairs,
-    first_wins,
+    first_wins_by_priority,
 )
 
 TIER3_MAX_BLOCK = 20
+
+# Every tier method label, ranked in the order the reference runs its tiers
+# (1a, 2a, 2b, 2c, 2d, 3): the lowest priority to claim a pair wins it.
+TIER_METHOD_PRIORITY = {
+    "tier1a_mufon_nuforc": 1,
+    "tier2a_mufon_ufocat": 2,
+    "tier2b_nuforc_ufocat": 3,
+    "tier2c_updb_mufon": 4,
+    "tier2c_updb_nuforc": 5,
+    "tier2c_updb_ufocat": 6,
+    "tier2d_ufosearch_mufon": 7,
+    "tier2d_ufosearch_nuforc": 8,
+    "tier2d_ufosearch_ufocat": 9,
+    "tier3_desc_fuzzy": 10,
+}
 
 
 def keyed_sightings(
@@ -275,12 +291,12 @@ def run_all_tiers(sighting: DataFrame, location: DataFrame) -> DataFrame:
 
     Tiers 1/2 pair disjoint source combinations, so only tier 3 can collide
     with them; the anti-join reproduces the reference's skip-existing-pairs
-    optimization and first_wins pins determinism.
+    optimization and first_wins_by_priority pins determinism.
     """
     t12 = tier_1a(sighting, location).unionByName(tier_2(sighting, location))
-    t12 = t12.persist()
     t3 = tier_3(sighting, existing_pairs=t12)
-    all_pairs = t12.withColumn("priority", F.lit(1)).unionByName(
-        t3.withColumn("priority", F.lit(2))
-    )
-    return first_wins(all_pairs)
+    prio = F.when(F.lit(False), F.lit(0))
+    for m, p in TIER_METHOD_PRIORITY.items():
+        prio = prio.when(F.col("method") == m, F.lit(p))
+    all_pairs = t12.unionByName(t3).withColumn("priority", prio)
+    return first_wins_by_priority(all_pairs, TIER_METHOD_PRIORITY)

@@ -854,8 +854,8 @@ def _run_stages(
     for m, p in METHOD_PRIORITY.items():
         prio = prio.when(F.col("method") == m, F.lit(p))
     # every pipeline method is in METHOD_PRIORITY and status is the
-    # constant 'pending', so the hash-aggregable specialization applies
-    # (identical output to first_wins, no SortAggregate)
+    # constant 'pending', so the hash-aggregable resolver applies
+    # (no SortAggregate)
     pairs = policy.stage("pairs", lambda: first_wins_by_priority(
         all_pairs.withColumn("priority", prio.otherwise(F.lit(99))),
         METHOD_PRIORITY,
@@ -875,7 +875,7 @@ def _run_stages(
             (F.col("score") >= cfg.cluster_threshold)
             | (F.col("method") == "substring")
         ).select("id_a", "id_b")
-        # pairs is one row per pair (first_wins) -> skip the entry distinct
+        # pairs is one row per pair (first wins) -> skip the entry distinct
         cc = connected_components(
             edges, stats=final_cc_stats, edges_distinct=True
         )

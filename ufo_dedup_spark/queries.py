@@ -1711,6 +1711,77 @@ def historic_category_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- non-SQL-expressible ops: rows-only driver check, pinned by pytest ----
 
 
+# lang -> (city, state, country) of the sightings _tier_frames derives
+_TIER_PLACES = {
+    "de": ("Fredericksburg", "TX", "US"),
+    "en": ("Phoenix", "AZ", "US"),
+    "es": ("El Paso", "TX", "US"),
+    "fr": ("Montreal", "QC", "CA"),
+    "zh": ("San Francisco", "CA", "US"),
+}
+
+
+def _tier_frames(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(sighting, location) frames for the tier dedup, one sighting per
+    document: source doc_id % 5 + 1 (all five SRC_* ids), description the
+    doc text, and a day n_chars // 10 days after 2001-01-01 — so the
+    planted near-dup documents (lengths a few chars apart) share date
+    blocks — with a time on every third. lang picks the place; doc_id
+    residues add the noise the key normalizers remove (a '?' suffix, a
+    lower-case state). raw_text is the bare upper-case city (the UFOCAT
+    form tiers 2a-2c read) for doc_id % 4 < 2, else 'City, ST' (the
+    UFO-search form tier 2d parses)."""
+    places = spark.createDataFrame(
+        [(lang, *p) for lang, p in _TIER_PLACES.items()],
+        "lang string, city string, state string, country string",
+    )
+    d = _read(spark, sf_dir, "documents").join(F.broadcast(places), "lang")
+    k = F.col("doc_id")
+    city = F.when(k % 7 == 0, F.concat("city", F.lit("?"))).otherwise(
+        F.col("city")
+    )
+    state = F.when(k % 4 == 0, F.lower("state")).otherwise(F.col("state"))
+    day = F.date_add(
+        F.lit("2001-01-01").cast("date"),
+        F.floor(F.col("n_chars") / 10).cast("int"),
+    )
+    sighting = d.select(
+        k.alias("id"),
+        (k % 5 + 1).cast("int").alias("source_db_id"),
+        F.concat(
+            day.cast("string"),
+            F.when(k % 3 == 0, F.lit("T21:30")).otherwise(F.lit("")),
+        ).alias("date_event"),
+        F.col("text").alias("description"),
+        k.alias("location_id"),
+    )
+    location = d.select(
+        k.alias("id"),
+        F.when(k % 4 < 2, F.upper(city))
+        .otherwise(F.concat(city, F.lit(", "), state))
+        .alias("raw_text"),
+        city.alias("city"),
+        state.alias("state"),
+        "country",
+    )
+    return sighting, location
+
+
+@register("sighting_tier_pairs")  # no oracle: difflib scores are not
+# SQL-expressible; tests/test_tiers.py pins the rows to oracle_tiers.py
+def sighting_tier_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's three-tier sighting dedup (dedup.py:283-595):
+    blocking equi-joins per tier, difflib scoring, first tier wins — as the
+    declared pair table."""
+    from ufo_dedup_spark.operators.tiers import run_all_tiers
+    from ufo_dedup_spark.schema import PAIRS_SCHEMA
+
+    out = run_all_tiers(*_tier_frames(spark, sf_dir))
+    return out.select(*PAIRS_SCHEMA.fieldNames())
+
+
 @register("minhash_lsh_candidates")  # no oracle: hash permutations
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signature -> LSH banding -> candidate pairs over documents

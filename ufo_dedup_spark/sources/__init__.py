@@ -1,1 +1,2 @@
-"""Source scans and sinks (S1-S7)."""
+"""Table I/O: read the page corpus and write cluster assignments, Iceberg
+or parquet (tables.py)."""
