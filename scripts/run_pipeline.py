@@ -1,6 +1,6 @@
 """Run the web dedup pipeline on the synthetic corpus and report metrics.
 
-Usage: python scripts/run_pipeline.py [--rows N] [--seed S] [--master M]
+Usage: python scripts/run_pipeline.py [--rows N] [--seed S] [--master M] [--json]
 """
 
 from __future__ import annotations
@@ -10,10 +10,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from ufo_dedup_spark.ledger import stage_ledger, stage_tag  # noqa: E402
 from ufo_dedup_spark.pipeline import (  # noqa: E402
     DISK_BARRIER_ROWS,
     PipelineConfig,
@@ -71,37 +72,26 @@ def main():
         pages = pages.persist()
     n_pages = pages.count()
 
-    def _next_job_id() -> int:
-        return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
-
-    j0 = _next_job_id()
+    sc = spark.sparkContext
+    first_job = sc._jsc.sc().dagScheduler().nextJobId()
     t0 = time.time()
-    phases: dict = {}
-    result = run_pipeline(spark, pages, cfg, timings=phases, n_docs_hint=n_pages)
-    # the stages after cheap_cc are lazy: the pairs count materializes
-    # substring-LCS + first-wins dedup, the clusters count the final CC —
-    # timing the two actions completes the per-phase table
-    # pairs + CC rounds already materialized inside run_pipeline (the
-    # substring_pairs_and_cc_rounds phase); these two actions are warm
-    # except the final clusters join/aggregate
-    t = time.time()
-    n_pairs = result["pairs"].count()
-    phases["pairs_count"] = round(time.time() - t, 2)
-    t = time.time()
-    n_clusters = (
-        result["clusters"]
-        .groupBy("cluster_id")
-        .count()
-        .filter(F.col("count") > 1)
-        .count()
-    )
-    phases["clusters_finish"] = round(time.time() - t, 2)
+    result = run_pipeline(spark, pages, cfg, n_docs_hint=n_pages)
+    with stage_tag(sc, "pairs_count"):
+        n_pairs = result["pairs"].count()
+    with stage_tag(sc, "clusters_finish"):
+        n_clusters = (
+            result["clusters"]
+            .groupBy("cluster_id")
+            .count()
+            .filter(F.col("count") > 1)
+            .count()
+        )
     elapsed = time.time() - t0
-    n_jobs = _next_job_id() - j0
 
     if args.json:
         import json
 
+        ledger = stage_ledger(sc, first_job)
         print(json.dumps({
             "rows": n_pages,
             "master": args.master,
@@ -109,8 +99,9 @@ def main():
             "docs_per_sec": round(n_pages / elapsed, 1),
             "pairs": n_pairs,
             "multi_clusters": n_clusters,
-            "n_jobs": n_jobs,
-            "phases": phases,
+            "n_jobs": sum(row["jobs"] for row in ledger.values()),
+            "counters": result["counters"],
+            "ledger": ledger,
         }))
         spark.stop()
         return

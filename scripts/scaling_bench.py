@@ -128,17 +128,17 @@ def main():
                 b["pairs"], b["multi_clusters"]
             ), "outputs must be identical across reps"
         best = dict(runs[0])
-        # per-phase MIN across reps: on this shared host a single leg's
-        # phase profile is not trustworthy (identical-code phases varied
-        # ~2x between reps); contention noise is one-sided per phase for
-        # the same reason it is for totals, so the per-phase floor is the
-        # machine-independent decomposition. Published alongside the raw
-        # per-rep phase dicts so the aggregation is auditable.
+        # per-phase (ledger row wall_s) MIN across reps: on this shared host
+        # a single leg's phase profile is not trustworthy (identical-code
+        # phases varied ~2x between reps); contention noise is one-sided per
+        # phase for the same reason it is for totals, so the per-phase floor
+        # is the machine-independent decomposition. Published alongside the
+        # raw per-rep ledgers so the aggregation is auditable.
         best["phases_min_of_reps"] = {
-            k: min(r["phases"][k] for r in runs if k in r.get("phases", {}))
-            for k in runs[0].get("phases", {})
+            k: min(r["ledger"][k]["wall_s"] for r in runs if k in r["ledger"])
+            for k in runs[0]["ledger"]
         }
-        best["phases_all_reps"] = [r.get("phases", {}) for r in runs]
+        best["phases_all_reps"] = [r["ledger"] for r in runs]
         return best, [r["elapsed_sec"] for r in runs]
 
     low, low_all = best_of(low_master)

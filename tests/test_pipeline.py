@@ -6,6 +6,8 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
@@ -326,6 +328,104 @@ def test_auto_policy(master, n_docs, kind, large):
     policy = _auto_policy(master, n_docs)
     assert type(policy) is kind
     assert policy.large is large
+
+
+def _shuffle_written(jsc) -> int:
+    """Shuffle bytes the executors report having written so far."""
+    jsc.listenerBus().waitUntilEmpty()
+    execs = jsc.statusStore().executorList(True)
+    return sum(execs.apply(i).totalShuffleWrite() for i in range(execs.size()))
+
+
+def test_stage_ledger_reconciles(spark, corpus):
+    """The stage ledger accounts for a whole run under a caller's job
+    group: one row per stage that ran jobs, plus ``untagged`` (here the
+    caller's two forcing actions), whose jobs and shuffle write sum to the
+    scheduler's and the executors' own totals; every job keeps the
+    caller's group; a window the status store no longer holds raises."""
+    from ufo_dedup_spark.ledger import stage_ledger
+
+    pages, _, _ = corpus
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    written0 = _shuffle_written(jsc)
+    first = jsc.dagScheduler().nextJobId()
+    sc.setJobGroup("outer", "ledger test")
+    try:
+        out = run_pipeline(spark, pages, PipelineConfig())
+        out["pairs"].count()
+        out["clusters"].count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    end = jsc.dagScheduler().nextJobId()
+    ledger = stage_ledger(sc, first)
+
+    for name in ("docs", "candidates", "doc_tokens", "winnow", "verified",
+                 "cheap_clusters", "clusters", "untagged"):
+        assert ledger[name]["jobs"] >= 1, (name, ledger)
+    assert sum(r["jobs"] for r in ledger.values()) == end - first
+    written = sum(r["shuffle_write_mb"] for r in ledger.values()) * 2**20
+    assert written == pytest.approx(_shuffle_written(jsc) - written0, abs=1)
+    store = jsc.statusStore()
+    groups = {str(store.job(j).jobGroup()) for j in range(first, end)}
+    assert groups == {"Some(outer)"}
+    with pytest.raises(RuntimeError, match="spark.ui.retainedJobs"):
+        stage_ledger(sc, -1)
+
+
+def test_stage_ledger_counts_a_shared_stage_once(spark, tmp_path):
+    """A job submitted while another job's shuffle stage is running waits
+    on that same stage, so both list its id; the ledger counts the stage's
+    metrics once. (The pipeline's own shared stages are skipped ones with
+    no metrics, so this builds one that did work.)"""
+    from ufo_dedup_spark.ledger import stage_ledger
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    marker = str(tmp_path / "release")
+
+    def held(rows):
+        while not os.path.exists(marker):
+            time.sleep(0.05)
+        return rows
+
+    def wait_for_active_jobs(n):
+        deadline = time.time() + 60
+        while len(sc.statusTracker().getActiveJobsIds()) < n:
+            assert time.time() < deadline, "jobs never started"
+            time.sleep(0.05)
+
+    shuffled = (
+        sc.parallelize(range(100), 2).mapPartitions(held)
+        .map(lambda x: (x % 5, 1)).reduceByKey(lambda a, b: a + b)
+    )
+    written0 = _shuffle_written(jsc)
+    first = jsc.dagScheduler().nextJobId()
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        try:
+            a = ex.submit(shuffled.count)
+            wait_for_active_jobs(1)
+            b = ex.submit(shuffled.count)
+            wait_for_active_jobs(2)
+        finally:
+            open(marker, "w").close()  # never leave a job held
+        assert a.result(timeout=120) == b.result(timeout=120) == 5
+    ledger = stage_ledger(sc, first)
+
+    store = jsc.statusStore()
+    stages = [
+        set(store.job(j).stageIds().mkString(",").split(","))
+        for j in (first, first + 1)
+    ]
+    assert stages[0] & stages[1], "the two jobs share no stage"
+    assert ledger["untagged"]["jobs"] == 2
+    written = _shuffle_written(jsc) - written0
+    assert written > 0
+    assert ledger["untagged"]["shuffle_write_mb"] * 2**20 == pytest.approx(
+        written, abs=1
+    )
 
 
 def test_methods_present(result):

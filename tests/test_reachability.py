@@ -92,3 +92,25 @@ def test_every_package_module_is_reached():
         f"modules only tests reach (wire them into a pipeline stage, a "
         f"query or perfbench, or delete them): {unreached}"
     )
+
+
+def test_scripts_import_their_own_checkout():
+    """A script that puts a fixed path on sys.path imports whichever
+    checkout lives there, not its own: a parent-commit copy or a fresh
+    clone would silently run another tree's package. Paths must be derived
+    from ``__file__``."""
+    fixed = []
+    for path in sorted((ROOT / "scripts").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("insert", "append")
+                and ast.unparse(node.func.value) == "sys.path"
+                and any(
+                    isinstance(a, ast.Constant) and isinstance(a.value, str)
+                    for a in node.args
+                )
+            ):
+                fixed.append(f"{path.name}:{node.lineno}")
+    assert not fixed, f"string-literal sys.path entries: {fixed}"

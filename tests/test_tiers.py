@@ -276,6 +276,25 @@ def test_run_all_tiers_plan_hash_aggregates_uncached(spark):
     assert "InMemoryRelation" not in plan
 
 
+def test_tier3_udf_evaluated_once(spark):
+    """Tier 3 filters on its score: predicate pushdown must not evaluate
+    the UDF a second time below the anti-join on tier-1/2 pairs. Exactly
+    one ArrowEvalPython for tier3_score_udf, and the LeftAnti join under
+    it (pairs tiers 1/2 own are never scored)."""
+    lines = _executed_plan(
+        tiers.run_all_tiers(*to_dfs(spark, random_rows(7, 40)))
+    ).splitlines()
+    udf = [i for i, ln in enumerate(lines)
+           if "ArrowEvalPython" in ln and "tier3_score_udf" in ln]
+    anti = [i for i, ln in enumerate(lines) if "LeftAnti" in ln]
+    assert len(udf) == 1 and len(anti) == 1, (udf, anti)
+
+    def depth(i):
+        return len(lines[i]) - len(lines[i].lstrip(" :|+-"))
+
+    assert udf[0] < anti[0] and depth(udf[0]) < depth(anti[0])
+
+
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="driver testdata absent")
 def test_sighting_tier_pairs_query_matches_oracle(spark):
     """The registered query equals the spec oracle run on the same

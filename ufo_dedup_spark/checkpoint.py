@@ -35,6 +35,8 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ufo_dedup_spark.ledger import with_caller_properties
+
 
 def config_fingerprint(*parts) -> str:
     """Stable fingerprint of configuration objects (dataclasses, strings)."""
@@ -197,8 +199,10 @@ class CheckpointManager:
             for b in pending:
                 run_bucket(b)
         else:
+            # the caller's job group and stage tag ride along to each bucket
+            run = with_caller_properties(self.spark.sparkContext, run_bucket)
             with ThreadPoolExecutor(max_workers=concurrency) as pool:
-                futures = [pool.submit(run_bucket, b) for b in pending]
+                futures = [pool.submit(run, b) for b in pending]
                 try:
                     for fu in futures:
                         fu.result()  # surface the first failure; completed

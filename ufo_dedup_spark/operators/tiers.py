@@ -45,6 +45,14 @@ from ufo_dedup_spark.operators.pairs import (
 
 TIER3_MAX_BLOCK = 20
 
+# Marked non-deterministic (it IS deterministic — this only restricts the
+# optimizer, as substring.lcs_len_udf does): tier_3 filters on the score
+# column, and predicate pushdown otherwise evaluates the UDF twice — once
+# in a filter pushed below the LeftAnti join on existing pairs (scoring
+# pairs tiers 1/2 already own) and again in the projection above it
+# (plan-asserted by test_tier3_udf_evaluated_once).
+_tier3_score = tier3_score_udf.asNondeterministic()
+
 # Every tier method label, ranked in the order the reference runs its tiers
 # (1a, 2a, 2b, 2c, 2d, 3): the lowest priority to claim a pair wins it.
 TIER_METHOD_PRIORITY = {
@@ -275,7 +283,7 @@ def tier_3(
     scored = cand.select(
         "id_a",
         "id_b",
-        tier3_score_udf(
+        _tier3_score(
             F.col("desc_a"), F.col("desc_b"), F.col("src_a"), F.col("src_b")
         ).alias("score"),
         F.lit("tier3_desc_fuzzy").alias("method"),

@@ -38,7 +38,6 @@ import atexit
 import os
 import shutil
 import tempfile
-import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -55,6 +54,7 @@ from ufo_dedup_spark.functions.hashing import (
     make_minhash_udf,
     make_simhash_udf,
 )
+from ufo_dedup_spark.ledger import stage_tag, with_caller_properties
 from ufo_dedup_spark.operators.connected_components import connected_components
 from ufo_dedup_spark.operators.minhash_lsh import (
     band_hashes_col,
@@ -730,8 +730,7 @@ def _run_stages(
     cfg: PipelineConfig,
     use_extractor: bool,
     policy: _Blocks,
-    timings: dict | None = None,
-) -> dict[str, DataFrame]:
+) -> dict:
     """The dedup stage graph, declared once: docs -> {signatures +
     candidates, tokens, winnow} -> verify -> cheap CC -> substring -> pairs
     -> clusters. ``policy`` decides how each named stage materializes.
@@ -740,22 +739,24 @@ def _run_stages(
     inside one job, so the corpus-sized ones are EAGER barriers — lazy
     persist would let each branch recompute the full upstream (measured 3x
     wall-clock at 20k docs).
+
+    Each stage's jobs carry the job tag ``dedup.<stage>`` (see
+    ledger.stage_ledger for what each row then holds).
     """
     sc = pages.sparkSession.sparkContext
-    timings = {} if timings is None else timings
 
-    def _mark(key: str, t0: float) -> None:
-        timings[key] = round(time.time() - t0, 2)
+    def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        with stage_tag(sc, name):
+            return policy.stage(name, build)
 
-    _t = time.time()
-    docs = policy.stage(
+    docs = stage(
         "docs", lambda: prepare_documents(pages, use_extractor=use_extractor)
     )
     if policy.large is None:
         # one cheap count of the materialized barrier decides storage for
         # the remaining (larger) corpus-sized barriers
-        policy.large = docs.count() >= DISK_BARRIER_ROWS
-    _mark("docs_extract", _t)
+        with stage_tag(sc, "docs"):
+            policy.large = docs.count() >= DISK_BARRIER_ROWS
 
     # The three doc-derived stages — MinHash/SimHash signatures (inside
     # candidate_pairs), the per-doc token table, and the winnow
@@ -782,12 +783,10 @@ def _run_stages(
     def _branch(branch) -> DataFrame:
         pool, name, build = branch
         sc.setLocalProperty("spark.scheduler.pool", pool)
-        t0 = time.time()
         try:
-            return policy.stage(name, build)
+            return stage(name, build)
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
-            _mark(f"branch_{pool}", t0)
 
     # Branch-pool width is SCALE-ADAPTIVE (the corpus-size signal that
     # drives barrier storage): small corpora run all three branches at
@@ -800,32 +799,30 @@ def _run_stages(
     # once triples the worker fleet and thrashes the bus (r5 measurement).
     # Two at a time still hides the fixed latency (the JVM-only token
     # branch overlaps the signature UDFs).
-    _t = time.time()
     with ThreadPoolExecutor(max_workers=2 if policy.large else 3) as ex:
-        cands, prepped, *sub_cands = ex.map(_branch, branches)
-    _mark("branch_block_wall", _t)
+        cands, prepped, *sub_cands = ex.map(
+            with_caller_properties(sc, _branch), branches
+        )
 
-    _t = time.time()
     # filtered=False + filter on the materialized column: the threshold
     # predicate would otherwise be pushed below the scoring projection and
     # re-evaluate the score expression per row (see verify_candidate_pairs)
-    verified = policy.verified(
-        cands,
-        lambda part: verify_candidate_pairs(
-            part, docs, cfg, prepped=prepped, filtered=False
-        ),
-    ).filter(F.col("score") >= cfg.verify_threshold)
-    _mark("verify", _t)
+    with stage_tag(sc, "verified"):
+        verified = policy.verified(
+            cands,
+            lambda part: verify_candidate_pairs(
+                part, docs, cfg, prepped=prepped, filtered=False
+            ),
+        ).filter(F.col("score") >= cfg.verify_threshold)
     all_pairs = verified
+    cc_stats: dict = {}
     if cfg.substring_enabled:
         # cluster the cheap edges first so the expensive substring stage can
         # skip intra-cluster candidates. Capped at cheap_cc_max_iter: a
         # partially converged clustering is a FINER sound partition (equal
         # labels still imply connected), so the exclusion prunes less but
         # never wrongly — and this CC's only job is pruning.
-        _t = time.time()
-        cc_stats: dict = {}
-        cheap_cc = policy.stage(
+        cheap_cc = stage(
             "cheap_clusters",
             lambda: connected_components(
                 verified.filter(
@@ -838,10 +835,7 @@ def _run_stages(
                 edges_distinct=True,
             ),
         )
-        _mark("cheap_cc", _t)
-        timings["cheap_cc_rounds"] = cc_stats.get("rounds", 0)
-        timings["cheap_cc_entry_edges"] = cc_stats.get("entry_edges", 0)
-        all_pairs = all_pairs.unionByName(policy.stage(
+        all_pairs = all_pairs.unionByName(stage(
             "substring_pairs",
             lambda: substring_pairs(
                 docs, cfg, exclude=verified, exclude_clusters=cheap_cc,
@@ -849,25 +843,22 @@ def _run_stages(
             ),
         ))
 
-    _t = time.time()
     prio = F.when(F.lit(False), F.lit(0))
     for m, p in METHOD_PRIORITY.items():
         prio = prio.when(F.col("method") == m, F.lit(p))
     # every pipeline method is in METHOD_PRIORITY and status is the
     # constant 'pending', so the hash-aggregable resolver applies
     # (no SortAggregate)
-    pairs = policy.stage("pairs", lambda: first_wins_by_priority(
+    pairs = stage("pairs", lambda: first_wins_by_priority(
         all_pairs.withColumn("priority", prio.otherwise(F.lit(99))),
         METHOD_PRIORITY,
     ))
-    _mark("build_tail", _t)
 
     # NOTE: connected_components runs its driver loop while the clusters
     # stage is built — under the lazy policies its first fingerprint job
     # is also what materializes the persisted pairs table (substring LCS +
-    # first-wins dedup), so this marked interval covers substring
-    # verification + pair dedup + all final CC rounds.
-    _t = time.time()
+    # first-wins dedup), so the clusters row covers substring verification
+    # + pair dedup + all final CC rounds.
     final_cc_stats: dict = {}
 
     def build_clusters() -> DataFrame:
@@ -883,10 +874,14 @@ def _run_stages(
             "id", "url", F.coalesce("cluster_id", "id").alias("cluster_id")
         )
 
-    clusters = policy.stage("clusters", build_clusters)
-    _mark("substring_pairs_and_cc_rounds", _t)
-    timings["final_cc_rounds"] = final_cc_stats.get("rounds", 0)
-    return {"docs": docs, "pairs": pairs, "clusters": clusters}
+    clusters = stage("clusters", build_clusters)
+    counters = {
+        "cheap_cc_rounds": cc_stats.get("rounds", 0),
+        "cheap_cc_entry_edges": cc_stats.get("entry_edges", 0),
+        "final_cc_rounds": final_cc_stats.get("rounds", 0),
+    }
+    return {"docs": docs, "pairs": pairs, "clusters": clusters,
+            "counters": counters}
 
 
 def run_pipeline(
@@ -894,21 +889,15 @@ def run_pipeline(
     pages: DataFrame,
     cfg: PipelineConfig | None = None,
     use_extractor: bool = True,
-    timings: dict | None = None,
     n_docs_hint: int | None = None,
-) -> dict[str, DataFrame]:
-    """Full pipeline -> {'docs', 'pairs', 'clusters'} DataFrames.
+) -> dict:
+    """Full pipeline -> {'docs', 'pairs', 'clusters'} DataFrames, plus
+    'counters' (cheap and final CC rounds, cheap CC entry edges).
 
     ``pairs``: (id_a, id_b, score, method, status), canonical, one row per
     pair (method priority: exact > minhash_lsh > simhash > prefix >
     substring). ``clusters``: (id, cluster_id) for every doc, singletons
     included with cluster_id = id.
-
-    ``timings``: optional dict populated with per-barrier wall-clock
-    seconds (docs_extract, the three concurrent branch durations, verify,
-    cheap_cc). Branches overlap, so their durations sum to more than the
-    wall they occupy; the stages after cheap_cc are lazy and land in the
-    caller's first action (run_pipeline.py times those separately).
 
     ``n_docs_hint``: approximate corpus size, used only to pick barrier
     storage up front (the docs barrier itself can then go to disk);
@@ -916,9 +905,7 @@ def run_pipeline(
     barrier.
     """
     policy = _auto_policy(spark.sparkContext.master or "", n_docs_hint)
-    return _run_stages(
-        pages, cfg or PipelineConfig(), use_extractor, policy, timings
-    )
+    return _run_stages(pages, cfg or PipelineConfig(), use_extractor, policy)
 
 
 def run_pipeline_checkpointed(
