@@ -4,15 +4,19 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from ufo_dedup_spark.operators import connected_components as cc_mod
 from ufo_dedup_spark.operators.connected_components import connected_components
 
 
-def _cc(spark, edges):
+def _cc(spark, edges, stats=None, edges_distinct=False):
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     return {
         r["id"]: r["cluster_id"]
-        for r in connected_components(df).collect()
+        for r in connected_components(
+            df, stats=stats, edges_distinct=edges_distinct
+        ).collect()
     }
 
 
@@ -21,8 +25,12 @@ def test_single_edge(spark):
 
 
 def test_chain(spark):
-    got = _cc(spark, [(1, 2), (2, 3), (3, 4), (4, 5)])
+    stats: dict = {}
+    got = _cc(spark, [(1, 2), (2, 3), (3, 4), (4, 5)], stats)
     assert got == {i: 1 for i in range(1, 6)}
+    # the round that forms the star forest is the last (waiting for a
+    # round that changes nothing took 3)
+    assert stats["rounds"] == 2 and stats["converged"]
 
 
 def test_two_components(spark):
@@ -35,17 +43,21 @@ def test_star_and_duplicate_edges(spark):
     assert got == {1: 1, 2: 1, 3: 1, 5: 1}
 
 
-def test_random_graph_matches_union_find(spark):
-    rng = random.Random(3)
-    nodes = list(range(100))
+def _random_edges(seed, n_nodes, n_edges):
+    rng = random.Random(seed)
     edges = [
-        (rng.choice(nodes), rng.choice(nodes)) for _ in range(80)
+        (rng.randrange(n_nodes), rng.randrange(n_nodes))
+        for _ in range(n_edges)
     ]
-    edges = [(a, b) for a, b in edges if a != b]
+    return [(a, b) for a, b in edges if a != b]
 
-    parent = {n: n for n in nodes}
+
+def _union_find(edges):
+    """{node: min node id of its component} for every node of ``edges``."""
+    parent = {}
 
     def find(x):
+        parent.setdefault(x, x)
         while parent[x] != x:
             parent[x] = parent[parent[x]]
             x = parent[x]
@@ -55,14 +67,62 @@ def test_random_graph_matches_union_find(spark):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in list(parent)}
 
-    expected = {}
-    for a, b in edges:
-        for n in (a, b):
-            expected[n] = find(n)
 
-    got = _cc(spark, edges)
-    assert got == expected
+def test_random_graph_matches_union_find(spark):
+    edges = _random_edges(3, 100, 80)
+    stats: dict = {}
+    assert _cc(spark, edges, stats) == _union_find(edges)
+    # one round fewer than waiting for a round that changes nothing (5)
+    assert stats["rounds"] == 4 and stats["converged"]
+
+
+def test_star_forest_input_takes_no_round(spark):
+    """Stars centred on their minimum id are already the fixed point: the
+    entry check stops before any star round."""
+    edges = [(1, 5), (7, 1), (2, 3), (10, 11), (10, 12), (13, 10)]
+    stats: dict = {}
+    got = _cc(spark, edges, stats)
+    assert got == _union_find(edges)
+    assert stats["rounds"] == 0 and stats["converged"]
+    assert stats["entry_edges"] == stats["final_edges"] == 12
+
+
+@pytest.mark.parametrize(
+    "edges, rounds",
+    [
+        ([(i, i + 1) for i in range(15)], 4),
+        ([(i + 1, i) for i in range(15)], 4),
+        (_random_edges(11, 200, 190), 5),
+    ],
+    ids=["chain16", "chain16_reversed", "random200"],
+)
+def test_stops_on_the_round_that_forms_the_star_forest(spark, edges, rounds):
+    """Labels equal union-find's, and the loop stops on the round that
+    forms the star forest: one round fewer than waiting for a round that
+    changes nothing (5, 5 and 6 rounds on these graphs)."""
+    stats: dict = {}
+    assert _cc(spark, edges, stats) == _union_find(edges)
+    assert stats["rounds"] == rounds and stats["converged"]
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        [(1, 2), (1, 2), (1, 3)],  # a star, but 2 has degree 2
+        [(1, 2), (2, 1), (2, 3), (3, 2), (3, 4), (1, 2)],  # a chain
+    ],
+    ids=["star", "chain"],
+)
+def test_duplicate_edges_under_distinct_promise(spark, edges):
+    """A broken edges_distinct promise costs work, never labels: a
+    duplicated edge makes its leaf look like degree 2, so the entry
+    check does not stop on it."""
+    stats: dict = {}
+    got = _cc(spark, edges, stats, edges_distinct=True)
+    assert got == _union_find(edges)
+    assert stats["converged"]
 
 
 def test_skew_path_equals_fast_path(spark, monkeypatch):

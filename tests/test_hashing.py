@@ -6,6 +6,7 @@ import numpy as np
 
 from ufo_dedup_spark.functions.hashing import (
     make_minhash_udf,
+    make_signature_udf,
     make_simhash_udf,
     make_winnow_udf,
     minhash_signature,
@@ -104,3 +105,44 @@ def test_signature_determinism(spark):
     s1 = df.select(udf("text").alias("s")).collect()[0]["s"]
     s2 = df.select(udf("text").alias("s")).collect()[0]["s"]
     assert list(s1) == list(s2)
+
+
+def _signatures_fused_and_single(df, num_perm, shingle_k, simhash_k, seed):
+    """[(minhash, simhash)] per row from the fused UDF and from the two
+    single-signature UDFs, in one query each."""
+    fused = make_signature_udf(num_perm, shingle_k, simhash_k, seed)
+    mh = make_minhash_udf(num_perm, shingle_k, seed)
+    sh = make_simhash_udf(simhash_k, seed)
+    rows = df.select(
+        fused("text").alias("f"),
+        mh("text").alias("mh"),
+        sh("text").alias("sh"),
+    ).collect()
+    return (
+        [(r["f"]["minhash"], r["f"]["simhash"]) for r in rows],
+        [(r["mh"], r["sh"]) for r in rows],
+    )
+
+
+def test_signature_udf_matches_single_udfs(spark):
+    """The pipeline's fused struct<minhash, simhash> UDF returns exactly
+    the bytes of make_minhash_udf and make_simhash_udf — NULL for None,
+    empty and tokenless texts included — on hand-picked texts and on the
+    400-doc synth corpus at the pipeline's default config."""
+    from ufo_dedup_spark.pipeline import PipelineConfig, prepare_documents
+    from ufo_dedup_spark.synth import SynthConfig, corpus_dataframes
+
+    df = spark.createDataFrame([(t,) for t in TEXTS + ["  \t "]], "text string")
+    fused, single = _signatures_fused_and_single(df, 32, 3, 2, 7)
+    assert fused == single
+    assert fused[3] == fused[4] == fused[6] == (None, None)  # "", None, blank
+    assert fused[5][0] is not None and fused[5][1] is not None  # "short"
+
+    cfg = PipelineConfig()
+    pages, _, _ = corpus_dataframes(spark, SynthConfig(n_docs=400, seed=42))
+    docs = prepare_documents(pages)
+    fused, single = _signatures_fused_and_single(
+        docs, cfg.num_perm, cfg.shingle_k, cfg.simhash_shingle_k, cfg.seed
+    )
+    assert len(fused) == 400
+    assert fused == single

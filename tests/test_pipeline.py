@@ -309,6 +309,32 @@ def test_barrier_policies_same_output(spark, corpus, result, make_policy):
     assert {tuple(r) for r in r2["clusters"].collect()} == want_clusters
 
 
+def test_parquet_bucketed_barrier_outlives_its_catalog_table(spark):
+    """The parquet policy's bucketed doc_tokens barrier drops its catalog
+    table as soon as the frame resolves, so runs leave no catalog entry;
+    the frame still reads its files, and still joins on id with no hash
+    exchange (the bucket spec was captured)."""
+    df = spark.range(50).select(
+        "id", (F.col("id") * 7).alias("x")
+    )
+    out = _Parquet().barrier(df, "doc_tokens")
+    assert not [
+        t.name for t in spark.catalog.listTables()
+        if t.name.startswith("ufo_dedup_barrier_")
+    ]
+    assert out.count() == 50
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        joined = out.alias("a").join(out.alias("b"), "id")
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        assert joined.count() == 50
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    assert "SortMergeJoin" in plan
+    assert "Exchange hashpartitioning" not in plan, plan
+
+
 @pytest.mark.parametrize(
     "master, n_docs, kind, large",
     [
@@ -514,6 +540,39 @@ def test_connected_components_capped_labels_sound(spark):
     # and uncapped converges to exactly two components
     full = connected_components(edges).collect()
     assert len({r["cluster_id"] for r in full}) == 2
+
+
+def test_keyed_barrier_evaluates_signature_udf_once(spark):
+    """candidate_pairs materializes ONE barrier, the keyed table (no
+    separate signatures barrier), and its plan evaluates the fused
+    signature UDF once: a single ArrowEvalPython node. A Filter on the UDF
+    column would be pushed below the projection and evaluate it twice."""
+    from ufo_dedup_spark.pipeline import candidate_pairs
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta eta theta"),
+         (2, "alpha beta gamma delta epsilon zeta eta theta iota"),
+         (3, None), (4, ""), (5, "short")],
+        "id long, text string",
+    )
+    plans = {}
+
+    def barrier(df, name):
+        plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        return df.localCheckpoint(eager=True)
+
+    cands = candidate_pairs(docs, PipelineConfig(), barrier=barrier)
+    assert sorted(plans) == ["keyed"]
+    assert plans["keyed"].count("ArrowEvalPython") == 1, plans["keyed"]
+    assert [(r["id_a"], r["id_b"]) for r in cands.collect()] == [(1, 2)]
+
+
+def test_config_rejects_more_band_rows_than_permutations():
+    """bands * rows_per_band > num_perm is a ValueError naming the
+    values (an assert would vanish under python -O)."""
+    with pytest.raises(ValueError, match=r"43 \* 3 = 129.*num_perm \(128\)"):
+        PipelineConfig(bands=43)
+    PipelineConfig(bands=32, rows_per_band=4)  # exactly num_perm is fine
 
 
 def test_lcs_udf_evaluated_once(spark):

@@ -22,7 +22,10 @@ Hash construction:
   needs.
 
 Banding note: LSH band hashes are derived from the signature JVM-side
-(operators/minhash_lsh.py) so the UDF output stays a single array column.
+(operators/minhash_lsh.py band_hashes_col), so the UDFs return signatures
+only. The pipeline calls make_signature_udf, which computes MinHash and
+SimHash from one tokenizer pass through the same per-doc kernels as the
+two single-signature UDFs.
 """
 
 from __future__ import annotations
@@ -32,7 +35,7 @@ from zlib import crc32
 import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 _MERSENNE61 = (1 << 61) - 1
 _MAX_U32 = (1 << 32) - 1
@@ -83,13 +86,13 @@ def _poly_combine(h: np.ndarray, k: int, seed: int = 0) -> np.ndarray:
     return acc
 
 
-def _shingle_hashes(text: str, k: int) -> np.ndarray:
-    """Distinct k-word-shingle hashes (< 2^32) of a document.
+def _shingle_hashes(h: np.ndarray, k: int) -> np.ndarray:
+    """Distinct k-word-shingle hashes (< 2^32) of a document's token
+    hashes ``h``.
 
     Shorter-than-k docs hash their full token sequence as one shingle
     (matching the round-1 string-join semantics).
     """
-    h = _token_hashes(text)
     if h.size == 0:
         return np.empty(0, dtype=np.uint64)
     kk = min(k, h.size)
@@ -105,6 +108,79 @@ def _perm_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
+def _minhash_kernel(num_perm: int, shingle_k: int, seed: int):
+    """Per-doc MinHash: token hashes -> int64 signature, or None for a
+    tokenless doc. sig[j] = min over shingles x of ((a_j * x + b_j) mod
+    M61)."""
+    a, b = _perm_params(num_perm, seed)
+    m61 = np.uint64(_MERSENNE61)
+    a_lo = (a & np.uint64(0xFFFFFFFF))[:, None]
+    a_hi = (a >> np.uint64(32))[:, None]
+    bb = b[:, None]
+    # shingle-axis chunk size: the inner matrices are num_perm x chunk
+    # uint64 (~10 temporaries) — at 256 that is ~256KB each, resident in a
+    # core's private L2. Unchunked, a 1000-shingle doc materializes ~10 x
+    # 1MB temporaries per doc; with one pandas-UDF worker per core those
+    # DRAM round-trips saturate the shared memory bus and cap the
+    # signature phase's core-scaling well below the machine ceiling. The
+    # min over chunks equals the global min — output is bit-identical.
+    chunk = max(1, (1 << 15) // num_perm)
+
+    def signature(h: np.ndarray) -> np.ndarray | None:
+        x = _shingle_hashes(h, shingle_k)
+        if x.size == 0:
+            return None
+        best = None
+        for s in range(0, x.size, chunk):
+            xc = x[None, s : s + chunk]
+            # Exact (a*x + b) mod M61 in uint64 without overflow:
+            # split a = a_hi*2^32 + a_lo (x < 2^32 by construction,
+            # a < 2^61). a_lo*x < 2^64 fits; a_hi*x < 2^61 fits; since
+            # 2^61 = 1 (mod M61),
+            # t*2^32 mod M61 = ((t<<32) & M61) + (t >> 29).
+            lo = a_lo * xc
+            lo = (lo & m61) + (lo >> np.uint64(61))  # < 2^61 + 8
+            hi = a_hi * xc
+            hi = ((hi << np.uint64(32)) & m61) + (hi >> np.uint64(29))
+            v = lo + hi + bb  # < 3*2^61 + 2^33, fits uint64
+            v = (v & m61) + (v >> np.uint64(61))
+            v = np.where(v >= m61, v - m61, v)
+            v = np.where(v >= m61, v - m61, v)
+            mn = v.min(axis=1)
+            best = mn if best is None else np.minimum(best, mn)
+        return best.astype(np.int64)
+
+    return signature
+
+
+def _simhash_kernel(shingle_k: int, seed: int):
+    """Per-doc SimHash: token hashes -> signed 64-bit fingerprint, or None
+    for a tokenless doc. Splitmix64-finalized polynomial k-shingle hashes
+    (seeded), bit-vote, sign-pack."""
+    seed_u64 = seed & ((1 << 64) - 1)
+    bitpos = np.arange(64, dtype=np.uint64)
+
+    def fingerprint(h: np.ndarray) -> int | None:
+        if h.size == 0:
+            return None
+        kk = min(shingle_k, h.size)
+        hs = np.unique(_splitmix64(_poly_combine(h, kk, seed=seed_u64)))
+        # chunked bit-vote: keeps the n x 64 unpack matrix L2-resident
+        # (same cache-bandwidth rationale as the MinHash chunking);
+        # summing per chunk is exact
+        bits = np.zeros(64, dtype=np.uint64)
+        for s in range(0, hs.size, 512):
+            hc = hs[s : s + 512, None]
+            bits += ((hc >> bitpos[None, :]) & np.uint64(1)).sum(axis=0)
+        fp = np.uint64(0)
+        majority = hs.size / 2.0
+        for bit in np.nonzero(bits > majority)[0]:
+            fp |= np.uint64(1) << np.uint64(bit)
+        return int(fp.astype(np.int64))
+
+    return fingerprint
+
+
 def make_minhash_udf(num_perm: int = 128, shingle_k: int = 5, seed: int = 42):
     """Returns a pandas UDF text -> array<long> MinHash signature.
 
@@ -115,52 +191,11 @@ def make_minhash_udf(num_perm: int = 128, shingle_k: int = 5, seed: int = 42):
     verification then has to discard. Banding filters NULL signatures out
     (operators/minhash_lsh.py), so empty docs never enter a bucket.
     """
-    a, b = _perm_params(num_perm, seed)
-
-    # shingle-axis chunk size: the inner matrices are num_perm x chunk
-    # uint64 (~10 temporaries) — at 256 that is ~256KB each, resident in a
-    # core's private L2. Unchunked, a 1000-shingle doc materializes ~10 x
-    # 1MB temporaries per doc; with one pandas-UDF worker per core those
-    # DRAM round-trips saturate the shared memory bus and cap the
-    # signature phase's core-scaling well below the machine ceiling. The
-    # min over chunks equals the global min — output is bit-identical.
-    chunk = max(1, (1 << 15) // num_perm)
+    signature = _minhash_kernel(num_perm, shingle_k, seed)
 
     @pandas_udf(ArrayType(LongType()))
     def minhash_udf(texts: pd.Series) -> pd.Series:
-        m61 = np.uint64(_MERSENNE61)
-        a_lo = (a & np.uint64(0xFFFFFFFF))[:, None]
-        a_hi = (a >> np.uint64(32))[:, None]
-        bb = b[:, None]
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            x = _shingle_hashes(t, shingle_k)
-            if x.size == 0:
-                out.append(None)
-                continue
-            best = None
-            for s in range(0, x.size, chunk):
-                xc = x[None, s : s + chunk]
-                # Exact (a*x + b) mod M61 in uint64 without overflow:
-                # split a = a_hi*2^32 + a_lo (x < 2^32 by construction,
-                # a < 2^61). a_lo*x < 2^64 fits; a_hi*x < 2^61 fits; since
-                # 2^61 = 1 (mod M61),
-                # t*2^32 mod M61 = ((t<<32) & M61) + (t >> 29).
-                lo = a_lo * xc
-                lo = (lo & m61) + (lo >> np.uint64(61))  # < 2^61 + 8
-                hi = a_hi * xc
-                hi = ((hi << np.uint64(32)) & m61) + (hi >> np.uint64(29))
-                v = lo + hi + bb  # < 3*2^61 + 2^33, fits uint64
-                v = (v & m61) + (v >> np.uint64(61))
-                v = np.where(v >= m61, v - m61, v)
-                v = np.where(v >= m61, v - m61, v)
-                mn = v.min(axis=1)
-                best = mn if best is None else np.minimum(best, mn)
-            out.append(best.astype(np.int64))
-        return pd.Series(out)
+        return pd.Series([signature(_token_hashes(t or "")) for t in texts])
 
     return minhash_udf
 
@@ -168,40 +203,47 @@ def make_minhash_udf(num_perm: int = 128, shingle_k: int = 5, seed: int = 42):
 def make_simhash_udf(shingle_k: int = 2, seed: int = 42):
     """Returns a pandas UDF text -> long 64-bit SimHash fingerprint.
 
-    Per doc: splitmix64-finalized polynomial k-shingle hashes (seeded),
-    bit-vote, sign-pack. Empty/None docs get NULL (same rationale as
-    MinHash: a constant fingerprint would co-bucket every empty doc in
-    every chunk block).
+    Empty/None docs get NULL (same rationale as MinHash: a constant
+    fingerprint would co-bucket every empty doc in every chunk block).
     """
-    seed_u64 = seed & ((1 << 64) - 1)
+    fingerprint = _simhash_kernel(shingle_k, seed)
 
     @pandas_udf(LongType())
     def simhash_udf(texts: pd.Series) -> pd.Series:
-        out: list = [None] * len(texts)
-        bitpos = np.arange(64, dtype=np.uint64)
-        for i, t in enumerate(texts):
-            if not t:
-                continue
-            h = _token_hashes(t)
-            if h.size == 0:
-                continue
-            kk = min(shingle_k, h.size)
-            hs = np.unique(_splitmix64(_poly_combine(h, kk, seed=seed_u64)))
-            # chunked bit-vote: keeps the n x 64 unpack matrix L2-resident
-            # (same cache-bandwidth rationale as the MinHash chunking);
-            # summing per chunk is exact
-            bits = np.zeros(64, dtype=np.uint64)
-            for s in range(0, hs.size, 512):
-                hc = hs[s : s + 512, None]
-                bits += ((hc >> bitpos[None, :]) & np.uint64(1)).sum(axis=0)
-            fp = np.uint64(0)
-            majority = hs.size / 2.0
-            for bit in np.nonzero(bits > majority)[0]:
-                fp |= np.uint64(1) << np.uint64(bit)
-            out[i] = int(fp.astype(np.int64))
-        return pd.Series(out, dtype="object")
+        return pd.Series(
+            [fingerprint(_token_hashes(t or "")) for t in texts],
+            dtype="object",
+        )
 
     return simhash_udf
+
+
+def make_signature_udf(num_perm: int, shingle_k: int,
+                       simhash_shingle_k: int, seed: int):
+    """Returns a pandas UDF text -> struct<minhash array<long>, simhash
+    long>: make_minhash_udf(num_perm, shingle_k, seed) and
+    make_simhash_udf(simhash_shingle_k, seed) in one Python worker pass,
+    tokenizing each doc once. Both fields are bit-identical to the
+    single-signature UDFs' outputs (NULL for tokenless docs)."""
+    signature = _minhash_kernel(num_perm, shingle_k, seed)
+    fingerprint = _simhash_kernel(simhash_shingle_k, seed)
+
+    @pandas_udf(StructType([
+        StructField("minhash", ArrayType(LongType())),
+        StructField("simhash", LongType()),
+    ]))
+    def signature_udf(texts: pd.Series) -> pd.DataFrame:
+        mh, sh = [], []
+        for t in texts:
+            h = _token_hashes(t or "")
+            mh.append(signature(h))
+            sh.append(fingerprint(h))
+        return pd.DataFrame({
+            "minhash": pd.Series(mh, dtype="object"),
+            "simhash": pd.Series(sh, dtype="object"),
+        })
+
+    return signature_udf
 
 
 def _rolling_gram_hashes(data: np.ndarray, gram: int) -> np.ndarray:
@@ -297,7 +339,7 @@ def minhash_signature(text: str, num_perm: int = 128, shingle_k: int = 5,
     UDF, via python ints (no overflow concerns). None for empty docs,
     mirroring the UDF's NULL-signature contract."""
     a, b = _perm_params(num_perm, seed)
-    x = _shingle_hashes(text, shingle_k)
+    x = _shingle_hashes(_token_hashes(text), shingle_k)
     if x.size == 0:
         return None
     sig = np.empty(num_perm, dtype=np.int64)

@@ -21,10 +21,10 @@ What a row holds depends on the barrier policy (pipeline.py):
 
   blocks, parquet
     docs, doc_tokens, winnow  their barriers
-    candidates      the signature barrier only: candidate-pair generation
-                    is lazy and runs inside ``verified``, kept fused by
-                    design (a barrier there measured ~1.5x slower)
-    verified        candidate-pair generation plus scoring
+    candidates      the keyed barrier: the fused MinHash/SimHash UDF and
+                    every family's bucket-key rows; the pairs generated
+                    from it are lazy and run inside ``verified``
+    verified        pair generation from the keyed table plus scoring
     cheap_clusters  the capped pre-substring CC rounds
     clusters        substring LCS, first-wins and the final CC rounds
                     (``substring_pairs`` and ``pairs`` are lazy)

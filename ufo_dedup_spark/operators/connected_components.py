@@ -16,10 +16,27 @@ duplicated) pays a distinct. Net: 4 exchanges per round vs 9 in the naive
 formulation — measured 2.3x faster end-to-end on the dedup pipeline's CC
 stages, with the same output.
 
+Stopping rule: the loop stops on the round that forms the STAR FOREST,
+not one round later. A node is settled if it is a root (every neighbor is
+larger: min(N(u)) > u) or a leaf (exactly one neighbor, and it is smaller).
+If every node is settled, every edge (u < v) joins a root u to a leaf v
+(v has a smaller neighbor so it is no root, hence a leaf whose only
+neighbor is u; u has a larger neighbor so it is no leaf, hence a root):
+each component is a star centred on its minimum id. On such a graph both
+star ops reproduce their input — large-star maps every leaf to its centre
+and emits nothing for the centre; small-star links each leaf to its only
+(smaller) neighbor — so the next round is a no-op, and the labels
+(min(N(u) ∪ {u})) are already final. Conversely, a round that changes
+nothing leaves a star forest, so stopping here saves exactly the round
+that would only confirm convergence. One job per check computes it: per
+u, count(v) and min(v) (map-side combined), then one global row of
+(edges, max degree, unsettled nodes). The same check runs at entry, so
+an input that already is a star forest takes 0 rounds.
+
 Skew note: a giant component concentrates its min-node's neighborhood into
 one window partition (linear in component size, never quadratic). Mitigated
-per round: the convergence-fingerprint job also measures the max
-neighborhood size, and any round whose hottest neighborhood exceeds
+per round: the check job also measures the max neighborhood size, and any
+round whose hottest neighborhood exceeds
 ``SKEW_DEGREE_CUTOFF`` switches its star ops to the two-phase-min
 formulation (groupBy min — map-side partial aggregation splits the hot key
 across input partitions, the physical partition acting as the salt — then a
@@ -152,7 +169,7 @@ def connected_components(
     components must leave the cap at its generous default.
 
     ``stats`` (optional dict) is populated with {'rounds': driver rounds
-    run, 'converged': bool, 'entry_edges': symmetrized distinct edge count,
+    run, 'converged': bool, 'entry_edges': symmetrized edge count at entry,
     'final_edges': edge count at exit} — the per-round cost diagnostic for
     large runs.
 
@@ -160,62 +177,48 @@ def connected_components(
     already one row per undirected pair (the pipeline's pair tables are,
     by construction) and skips the entry distinct — one exchange of the
     full edge list saved. Correctness does not depend on the promise
-    (every star round distincts its output); a duplicated input would
-    only inflate round-1 work and the entry_edges stat.
+    (every star round distincts its output, and a duplicated leaf edge
+    counts as degree 2, so it is never taken as settled); a duplicated
+    input would only inflate round-1 work and the entry_edges stat.
 
-    Round materialization rides the convergence-check job: each round ends
-    in a LAZY localCheckpoint — the logical plan truncates immediately
-    (a star op references its input plan twice, so without truncation the
-    plan tree grows exponentially with rounds), and the fingerprint
-    aggregation is the first consumer, so ONE job both materializes the
-    round and decides convergence — half the driver jobs of the
-    eager-checkpoint formulation. The same job measures edge count (->
-    next round's shuffle-partition count) and max neighborhood size (->
-    next round's star implementation, window fast path vs two-phase-min
-    skew path above ``SKEW_DEGREE_CUTOFF``).
+    Round materialization rides the star-forest check (module docstring):
+    each round ends in a LAZY localCheckpoint — the logical plan truncates
+    immediately (a star op references its input plan twice, so without
+    truncation the plan tree grows exponentially with rounds), and the
+    check aggregation is the first consumer, so ONE job both materializes
+    the round and decides convergence. The same job measures edge count
+    (-> next round's shuffle-partition count) and max neighborhood size
+    (-> next round's star implementation, window fast path vs two-phase-
+    min skew path above ``SKEW_DEGREE_CUTOFF``).
 
     ``spark.sql.shuffle.partitions`` is temporarily overridden per round
     and restored on exit; CC is a serial stage in the pipeline, so no
     concurrently-planned job observes the override.
 
-    One star round per materialization + fingerprint: fusing two rounds
-    per check measured 4.5x slower on the pipeline's CC stages (the
+    One star round per materialization + check: fusing two rounds per
+    check measured 4.5x slower on the pipeline's CC stages (the
     un-truncated second round recomputes the first round's stars at every
     self-reference).
     """
     spark = edges.sparkSession
     uv = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
 
-    def _fingerprint(df: DataFrame, need_degrees: bool) -> tuple:
-        """ONE job returning ((count, sum of xxhash64(u,v)), max degree).
-        The (n, h) pair is the convergence fingerprint (collision-safe in
-        practice, far cheaper than two exceptAll scans per round); max
-        degree drives skew-path selection. The per-u pre-aggregation is
-        map-side combined, so the extra stage shuffles at most one row per
-        (input partition, u) — and is skipped entirely when the edge set
-        is smaller than the skew cutoff (max degree <= edge count, so no
-        neighborhood can trip it): small graphs and late rounds pay only
-        the single global aggregate."""
-        if not need_degrees:
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-            ).collect()[0]
-            return (row["n"] or 0, row["h"]), 0
+    def _check(nbr: DataFrame) -> tuple[int, int, int]:
+        """ONE job over the symmetrized edge set: (edges, max degree,
+        unsettled nodes). Zero unsettled nodes means a star forest."""
+        c, m = F.col("_c"), F.col("_m")
+        settled = (m > F.col("u")) | ((c == 1) & (m < F.col("u")))
         row = (
-            df.groupBy("u")
+            nbr.groupBy("u")
+            .agg(F.count(F.lit(1)).alias("_c"), F.min("v").alias("_m"))
             .agg(
-                F.count(F.lit(1)).alias("_c"),
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("_h"),
-            )
-            .agg(
-                F.sum("_c").alias("n"),
-                F.sum("_h").alias("h"),
-                F.max("_c").alias("d"),
+                F.sum(c).alias("n"),
+                F.max(c).alias("d"),
+                F.count(F.when(~settled, 1)).alias("open"),
             )
             .collect()[0]
         )
-        return (row["n"] or 0, row["h"]), (row["d"] or 0)
+        return row["n"] or 0, row["d"] or 0, row["open"]
 
     def _round_partitions(n_edges: int) -> int:
         cores = spark.sparkContext.defaultParallelism
@@ -232,46 +235,27 @@ def connected_components(
         if not edges_distinct:
             uv = uv.distinct()
         nbr = _both_dirs(uv).localCheckpoint(eager=False)
-        # entry fingerprint WITHOUT the per-u degree pre-aggregation: a
-        # neighborhood can never exceed the total (symmetrized) edge
-        # count, so when that count is at or under the skew cutoff no
-        # degree can trip it — the groupBy exchange would be pure cost.
-        # Giant graphs (count above the cutoff) pay one extra degree job
-        # over the already-materialized nbr.
-        fp, max_deg = _fingerprint(nbr, False)  # materializes nbr
-        if fp[0] > SKEW_DEGREE_CUTOFF:
-            _, max_deg = _fingerprint(nbr, True)
+        n_edges, max_deg, unsettled = _check(nbr)  # materializes nbr
         if stats is not None:
-            stats["entry_edges"] = fp[0]
+            stats["entry_edges"] = n_edges
+            stats["final_edges"] = n_edges
             stats["rounds"] = 0
-            stats["converged"] = False
-        for _ in range(max_iter):
+            stats["converged"] = unsettled == 0
+        for _ in range(max_iter if unsettled else 0):
             spark.conf.set(
-                "spark.sql.shuffle.partitions", str(_round_partitions(fp[0]))
+                "spark.sql.shuffle.partitions", str(_round_partitions(n_edges))
             )
             large = _large_star_skew if max_deg > SKEW_DEGREE_CUTOFF else _large_star
             small = _small_star_skew if max_deg > SKEW_DEGREE_CUTOFF else _small_star
             nbr = _both_dirs(small(_both_dirs(large(nbr))))
             nbr = nbr.localCheckpoint(eager=False)
-            # materializes this round; degree stats only while the edge set
-            # is big enough that a neighborhood could exceed the cutoff.
-            # Safety margin: the gate uses the PREVIOUS fingerprint's edge
-            # count as a proxy, and each small-star round can grow the
-            # symmetrized edge set up to ~2x (linked + per-u self-links,
-            # both re-symmetrized) — without the margin, a round crossing
-            # the cutoff from just below would skip degree measurement and
-            # the NEXT round would run the window fast path on a hot
-            # neighborhood above the cutoff (the OOM/straggler case the
-            # cutoff exists to prevent).
-            fp2, max_deg = _fingerprint(nbr, 2 * fp[0] > SKEW_DEGREE_CUTOFF)
+            n_edges, max_deg, unsettled = _check(nbr)  # materializes the round
             if stats is not None:
                 stats["rounds"] += 1
-                stats["final_edges"] = fp2[0]
-            if fp2 == fp:
-                if stats is not None:
-                    stats["converged"] = True
+                stats["final_edges"] = n_edges
+                stats["converged"] = unsettled == 0
+            if not unsettled:
                 break
-            fp = fp2
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved_conf)
 

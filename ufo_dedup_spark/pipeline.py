@@ -4,9 +4,11 @@ Stages (north rule), each a declarative DataFrame job:
 
   pages (url, warc_ts, html, text, lang)
     -> extract      html -> text via pinned Arrow UDF (byte-identical per url)
-    -> signatures   MinHash (numpy pandas UDF) + SimHash; band hashes JVM-side
-    -> candidates   exact-hash ∪ LSH buckets ∪ SimHash chunks ∪ prefix blocks
-                    ∪ winnowed-substring buckets — all with bounded fan-out
+    -> candidates   one keyed table: per doc, one pandas UDF pass yields
+                    MinHash + SimHash, and one generator emits its exact,
+                    LSH-band (hashed JVM-side), SimHash-chunk and prefix
+                    bucket keys; plus winnowed-substring buckets — all with
+                    bounded fan-out
     -> verify       exact token Jaccard (JVM) + prefix shortcut; suffix-array
                     LCS for substring pairs
     -> pairs        (id_a, id_b, score, method) canonical, first-method-wins
@@ -17,8 +19,8 @@ Skew handling: every bucket-family generator bounds its fan-out via
 pairs_within_groups (all-pairs below cap, sorted chain above — cluster
 recall preserved through transitive closure).
 
-The stage graph is declared once, in _run_stages (signatures, tokens and
-winnow run as concurrent branches; a cheap CC over the verified pairs
+The stage graph is declared once, in _run_stages (the keyed table, tokens
+and winnow run as concurrent branches; a cheap CC over the verified pairs
 prunes substring candidates), and a barrier policy decides how each named
 stage materializes:
 
@@ -51,13 +53,12 @@ from ufo_dedup_spark.checkpoint import CheckpointManager, config_fingerprint
 from ufo_dedup_spark.functions.extract import EXTRACTOR_VERSION, extract_text_udf
 from ufo_dedup_spark.functions.hashing import (
     SIGNATURE_VERSION,
-    make_minhash_udf,
-    make_simhash_udf,
+    make_signature_udf,
 )
 from ufo_dedup_spark.ledger import stage_tag, with_caller_properties
 from ufo_dedup_spark.operators.connected_components import connected_components
 from ufo_dedup_spark.operators.minhash_lsh import (
-    band_hashes_col,
+    band_hash,
     pairs_within_groups,
 )
 from ufo_dedup_spark.operators.pairs import first_wins_by_priority
@@ -92,11 +93,12 @@ PREFIX_MIN_CHARS = 20
 PIPELINE_LOGIC_VERSION = 3
 
 # Corpus size (docs) at and above which the blocks policy stores its
-# corpus-sized barriers (docs / signatures / tokens / winnow fingerprints)
+# corpus-sized barriers (docs / keyed table / tokens / winnow fingerprints)
 # as serialized DISK_ONLY blocks instead of Spark's default deserialized
 # in-memory storage, and the branch pool narrows from 3 to 2. Rationale:
-# deserialized JVM residency of docs + token arrays + signatures is ~5x
-# their serialized size, and above ~1.5M docs the barriers evict/thrash one
+# deserialized JVM residency of the barriers is ~5x their serialized size
+# (6.5x for the keyed table at 200k docs: 1.04 GB in memory, 160 MB as
+# DISK_ONLY blocks), and above ~1.5M docs the barriers evict/thrash one
 # another in a single local heap (docs_extract measured 3.7 -> 47.7 s going
 # 1M -> 2M). A real cluster spreads them over executors — and parquet /
 # checkpoint barriers never had the problem — so this only changes
@@ -161,7 +163,13 @@ class PipelineConfig:
     cheap_cc_max_iter: int = 8
 
     def __post_init__(self):
-        assert self.bands * self.rows_per_band <= self.num_perm
+        if self.bands * self.rows_per_band > self.num_perm:
+            raise ValueError(
+                f"bands * rows_per_band ({self.bands} * "
+                f"{self.rows_per_band} = {self.bands * self.rows_per_band}) "
+                f"must not exceed num_perm ({self.num_perm}): each band "
+                f"hashes its own rows_per_band signature entries"
+            )
         if (
             self.substring_gram + self.substring_window - 1
             > self.substring_min_span
@@ -200,104 +208,69 @@ def candidate_pairs(
     """Union of all candidate generators with method labels (priority order
     resolves multi-method hits downstream).
 
-    ``barrier``: materialization function (df, name) -> df for the
-    signatures; the stage list passes its barrier policy's."""
-    minhash = make_minhash_udf(cfg.num_perm, cfg.shingle_k, cfg.seed)
-    simhash = make_simhash_udf(cfg.simhash_shingle_k, cfg.seed)
-    # EAGER barrier: both LSH and SimHash branches consume the signatures
-    # inside one downstream job. A lazy persist() does not protect against
-    # concurrent first-consumers (each sees a cache miss and recomputes the
-    # UDFs), so materialize here, through whichever barrier the policy
-    # serves (RDD blocks or parquet splits).
-    signed = barrier(
-        docs.select(
-            "id",
-            minhash(F.col("text")).alias("minhash"),
-            simhash(F.col("text")).alias("simhash"),
-        ),
-        "signatures",
+    ``barrier``: materialization function (df, name) -> df for the keyed
+    table (every bucket-key row of every family, ~48 per doc); the stage
+    list passes its barrier policy's."""
+    signature = make_signature_udf(
+        cfg.num_perm, cfg.shingle_k, cfg.simhash_shingle_k, cfg.seed
     )
+    signed = docs.select(
+        "id", "text", signature(F.col("text")).alias("_sig")
+    )
+    mh, sh = F.col("_sig.minhash"), F.col("_sig.simhash")
 
     # FUSED bucket families (guide §2.4 "remove shuffles outright"): all
     # four candidate generators are "pairs within groups" over DISJOINT
     # key spaces, so instead of four pairs_within_groups calls — each
     # paying its own count-agg exchange and collect-agg exchange (8
-    # exchanges) — the keyed rows are unioned under a family tag and ONE
-    # call does the bucket-size pre-agg, member semi-join and member
-    # collection for every family at once (2 exchanges). Family tag =
-    # METHOD_PRIORITY value, so the tag IS the method priority and the
+    # exchanges) — every doc's keyed rows are emitted under a family tag
+    # and ONE call does the bucket-size pre-agg, member semi-join and
+    # member collection for every family at once (2 exchanges). Family tag
+    # = METHOD_PRIORITY value, so the tag IS the method priority and the
     # per-pair method resolution below is a plain min(int) — hash-
     # aggregable with map-side partial aggregation (min_by over the method
     # STRING forced a SortAggregate, fully sorting the candidate union
-    # twice). Per-family semantics are unchanged: group keys are disjoint
-    # (the tag is part of the key), the per-group star cap applies exactly
-    # as before, and the SimHash Hamming verify runs on the family's pairs
-    # via the carried fingerprint (NULL for other families).
-    null_fp = F.lit(None).cast("long")
-    exact_rows = docs.select(
-        F.col("id").alias("_id"),
-        F.lit(METHOD_PRIORITY["exact"]).alias("_fam"),
-        F.lit(0).alias("_k1"),
-        F.xxhash64("text").alias("_k2"),
-        null_fp.alias("_fp"),
-    )
-    lsh_rows = (
-        signed.filter(F.col("minhash").isNotNull())
-        .select(
-            F.col("id").alias("_id"),
-            F.posexplode(
-                band_hashes_col("minhash", cfg.bands, cfg.rows_per_band)
-            ).alias("_k1", "_k2"),
+    # twice). Per-family semantics: group keys are disjoint (the tag is
+    # part of the key), the per-group star cap applies per group, and the
+    # SimHash Hamming verify runs on the family's pairs via the carried
+    # fingerprint (NULL for other families).
+    def key(method: str, k1, k2, fp=F.lit(None).cast("long")):
+        return F.struct(
+            F.lit(METHOD_PRIORITY[method]).alias("_fam"),
+            k1.alias("_k1"), k2.alias("_k2"), fp.alias("_fp"),
         )
-        .select(
-            "_id",
-            F.lit(METHOD_PRIORITY["minhash_lsh"]).alias("_fam"),
-            "_k1",
-            "_k2",
-            null_fp.alias("_fp"),
-        )
-    )
+
+    def keys_if(cond, keys: list):
+        # NULL signatures (tokenless docs) and short docs emit no rows of
+        # the family: guarded inline rather than by a Filter, which
+        # Catalyst would push below the projection and so evaluate the
+        # signature UDF a second time
+        return F.when(cond, F.array(*keys)).otherwise(F.array())
+
     chunk_bits = 64 // cfg.simhash_chunks
     chunk_mask = (1 << chunk_bits) - 1
-    sim_rows = (
-        signed.filter(F.col("simhash").isNotNull())
-        .select(
-            F.col("id").alias("_id"),
-            F.col("simhash").alias("_fp"),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftrightunsigned(
-                            F.col("simhash"), i * chunk_bits
-                        ).bitwiseAND(F.lit(chunk_mask))
-                        for i in range(cfg.simhash_chunks)
-                    ]
-                )
-            ).alias("_k1", "_k2"),
-        )
-        .select(
-            "_id",
-            F.lit(METHOD_PRIORITY["simhash"]).alias("_fam"),
-            "_k1",
-            "_k2",
-            "_fp",
-        )
+    rows = F.concat(
+        F.array(key("exact", F.lit(0), F.xxhash64("text"))),
+        keys_if(mh.isNotNull(), [
+            key("minhash_lsh", F.lit(i), band_hash(mh, i, cfg.rows_per_band))
+            for i in range(cfg.bands)
+        ]),
+        keys_if(sh.isNotNull(), [
+            key("simhash", F.lit(i),
+                F.shiftrightunsigned(sh, i * chunk_bits)
+                .bitwiseAND(F.lit(chunk_mask)), sh)
+            for i in range(cfg.simhash_chunks)
+        ]),
+        keys_if(F.length(F.trim("text")) >= PREFIX_MIN_CHARS, [
+            key("prefix", F.lit(0), F.xxhash64(F.substring(
+                F.lower(F.trim("text")), 1, PREFIX_MIN_CHARS))),
+        ]),
     )
-    lt = F.lower(F.trim(F.col("text")))
-    pfx_rows = (
-        docs.filter(F.length(F.trim("text")) >= PREFIX_MIN_CHARS)
-        .select(
-            F.col("id").alias("_id"),
-            F.lit(METHOD_PRIORITY["prefix"]).alias("_fam"),
-            F.lit(0).alias("_k1"),
-            F.xxhash64(F.substring(lt, 1, PREFIX_MIN_CHARS)).alias("_k2"),
-            null_fp.alias("_fp"),
-        )
-    )
-    keyed = (
-        exact_rows.unionByName(lsh_rows)
-        .unionByName(sim_rows)
-        .unionByName(pfx_rows)
+    # ONE barrier for the keyed table: pairs_within_groups reads it three
+    # times (bucket sizes, small-bucket semi-join, big-bucket star join),
+    # and each read would otherwise re-derive all ~48 rows per doc
+    keyed = barrier(
+        signed.select(F.col("id").alias("_id"), F.inline(rows)), "keyed"
     )
     fused = pairs_within_groups(
         keyed,
@@ -538,7 +511,7 @@ def substring_pairs(
     from clustering those cheap pairs — both pruned away BEFORE the
     expensive LCS UDF so it only sees genuinely new cross-cluster pairs.
     ``cands``: precomputed winnow candidates (the stage list computes them
-    concurrently with the signature and token branches).
+    concurrently with the keyed-table and token branches).
     """
     cands = cands.join(
         exclude.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
@@ -589,8 +562,8 @@ class _Blocks:
     barriers go DISK_ONLY once the corpus reaches DISK_BARRIER_ROWS docs.
 
     ``barrier(df, name)`` materializes a corpus-sized intermediate (also
-    handed to candidate_pairs / substring_candidate_pairs for their
-    signature and fingerprint tables); ``stage(name, build)`` returns a
+    handed to candidate_pairs / substring_candidate_pairs for their keyed
+    and fingerprint tables); ``stage(name, build)`` returns a
     named stage of the graph, materialized or left lazy; ``verified``
     materializes the scored candidates.
     """
@@ -616,11 +589,10 @@ class _Blocks:
             # lazy: the final CC's first job materializes it, and both the
             # CC and the caller read it
             return df.persist()
-        # candidates stay fused with verification: the family branches
-        # schedule concurrently inside one job and fill the cluster (a
-        # barrier here measured ~1.5x slower end-to-end). The winnow
-        # candidates (whose fingerprints are a barrier), substring pairs
-        # and clusters land in their consumer's job.
+        # the candidate pairs themselves stay lazy, generated from the
+        # keyed barrier inside verification's jobs. The winnow candidates
+        # (whose fingerprints are a barrier), substring pairs and clusters
+        # land in their consumer's job.
         return df
 
     def verified(self, cands: DataFrame, score: Callable) -> DataFrame:
@@ -647,8 +619,9 @@ class _Parquet(_Blocks):
     (SCALING_r06_lc4: verify 0.36 efficiency on a 4x grant). Bucketed
     parquet requires a catalog table (path-only parquet loses the bucket
     spec), so the frame is registered under a per-run temp name pointing
-    at the same temp dir; the bucket count follows the session's shuffle
-    partitioning so join co-partitioning lines up.
+    at the same temp dir, read back, and the name dropped again; the bucket
+    count follows the session's shuffle partitioning so join
+    co-partitioning lines up.
     """
 
     _dir: str | None = None
@@ -677,7 +650,12 @@ class _Parquet(_Blocks):
             .option("path", path)
             .saveAsTable(tbl)
         )
-        return spark.table(tbl)
+        # the resolved frame keeps the bucket spec and the file listing,
+        # so the catalog entry is dropped at once; the table is external
+        # (explicit path), so its files stay until the temp dir goes
+        out = spark.table(tbl)
+        spark.sql(f"DROP TABLE {tbl}")
+        return out
 
 
 class _Checkpoint(_Blocks):
@@ -685,7 +663,7 @@ class _Checkpoint(_Blocks):
     CheckpointManager stage (parquet + lineage manifest), and verify
     commits per deterministic score bucket (pmod(xxhash64(pair),
     n_buckets)), so a killed job resumes from the last completed bucket.
-    Signature and fingerprint barriers stay blocks: they only live inside
+    Keyed-table and fingerprint barriers stay blocks: they only live inside
     their stage's write."""
 
     def __init__(self, mgr, n_buckets: int):
@@ -731,9 +709,9 @@ def _run_stages(
     use_extractor: bool,
     policy: _Blocks,
 ) -> dict:
-    """The dedup stage graph, declared once: docs -> {signatures +
-    candidates, tokens, winnow} -> verify -> cheap CC -> substring -> pairs
-    -> clusters. ``policy`` decides how each named stage materializes.
+    """The dedup stage graph, declared once: docs -> {candidates (keyed
+    table), tokens, winnow} -> verify -> cheap CC -> substring -> pairs ->
+    clusters. ``policy`` decides how each named stage materializes.
 
     Every stage below fans out to multiple consumers that run concurrently
     inside one job, so the corpus-sized ones are EAGER barriers — lazy
@@ -758,22 +736,22 @@ def _run_stages(
         with stage_tag(sc, "docs"):
             policy.large = docs.count() >= DISK_BARRIER_ROWS
 
-    # The three doc-derived stages — MinHash/SimHash signatures (inside
-    # candidate_pairs), the per-doc token table, and the winnow
-    # fingerprint candidates — depend only on `docs` and are independent of
-    # each other, so they run as CONCURRENT driver threads in their own
-    # FAIR pools. Serially, each job's fixed driver latency (plan, AQE
+    # The three doc-derived stages — the candidates' keyed table (signature
+    # UDF + bucket keys, barriered inside candidate_pairs), the per-doc
+    # token table, and the winnow fingerprint candidates — depend only on
+    # `docs` and are independent of each other, so they run as CONCURRENT
+    # driver threads, each in a FAIR pool named after its stage. Serially, each job's fixed driver latency (plan, AQE
     # re-opt, barrier) adds up; overlapped, the fixed costs hide under
     # whichever branch is longest, which is what lifts multi-core scaling
     # (the 4N-core leg is latency-bound, not compute-bound).
     branches = [
-        ("signatures", "candidates",
+        ("candidates",
          lambda: candidate_pairs(docs, cfg, barrier=policy.barrier)),
-        ("tokens", "doc_tokens", lambda: prepare_tokens(docs)),
+        ("doc_tokens", lambda: prepare_tokens(docs)),
     ]
     if cfg.substring_enabled:
         branches.append((
-            "winnow", "winnow",
+            "winnow",
             lambda: substring_candidate_pairs(
                 docs, "id", "text", cfg.substring_gram, cfg.substring_window,
                 cfg.all_pairs_cap, barrier=policy.barrier,
@@ -781,8 +759,8 @@ def _run_stages(
         ))
 
     def _branch(branch) -> DataFrame:
-        pool, name, build = branch
-        sc.setLocalProperty("spark.scheduler.pool", pool)
+        name, build = branch
+        sc.setLocalProperty("spark.scheduler.pool", name)
         try:
             return stage(name, build)
         finally:
@@ -793,12 +771,12 @@ def _run_stages(
     # once — the phases are latency-bound there and a 3-wide pool measured
     # consistently faster at 20k docs (alternating A/B, adjacent pairs
     # 23.4/18.1, 17.4/15.5, 15.4/15.0 s for 2 vs 3). Large corpora keep 2:
-    # the signature and winnow branches are both Arrow/pandas-UDF heavy
+    # the candidates and winnow branches are both Arrow/pandas-UDF heavy
     # (each stage spawns one Python worker per core), and at
     # memory-bandwidth-bound multi-million-doc scale running all three at
     # once triples the worker fleet and thrashes the bus (r5 measurement).
     # Two at a time still hides the fixed latency (the JVM-only token
-    # branch overlaps the signature UDFs).
+    # branch overlaps the signature UDF).
     with ThreadPoolExecutor(max_workers=2 if policy.large else 3) as ex:
         cands, prepped, *sub_cands = ex.map(
             with_caller_properties(sc, _branch), branches
